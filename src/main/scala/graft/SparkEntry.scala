@@ -486,13 +486,8 @@ object SparkEntry {
     * queries (the reference keys embeddings by function id,
     * semantic_clustering.py:37-66): vec_id == node_id. */
   private def nodeClusters(s: SparkSession, dir: String): DataFrame = {
-    // committed stage table: the Lloyd chain runs ONCE per corpus; the
-    // three cluster consumers (cluster nodes/edges, question x cluster)
-    // re-read the two-long (vec_id, cluster) table instead of re-running
-    // assignment + means + reassignment each (VERDICT r03 #6)
-    val clusters = graft.graph.StageStore.getOrCreate(s, dir, "node_clusters") {
-      graft.ops.Clustering.lloydStep(s.read.parquet(s"$dir/embeddings.parquet"))
-    }.withColumnRenamed("vec_id", "node_id")
+    val clusters = graft.graph.Pipeline.nodeClusters(s, dir)
+      .withColumnRenamed("vec_id", "node_id")
     // both sides corpus-scaling, both distinct per node_id -> plain equi
     // join; AQE picks broadcast only while the cluster side actually fits
     graft.graph.Pipeline.nodes(s, dir).join(clusters, Seq("node_id"))
@@ -699,23 +694,13 @@ object SparkEntry {
         md5(col("config")).as("config_hash"))
   }
 
-  /** Per-type contiguous local index shared by the PyG export pair —
-    * committed as a stage table so the eager two-phase assignment
-    * (checkpoint + count-collect + window) runs once, not once per
-    * consuming query. */
-  private def pygLocal(s: SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "pyg_local") {
-      graft.canonical.Canonical.denseIdsBucketedBy(
-        graft.graph.Pipeline.nodes(s, dir), "node_type")
-    }
-
   /** PyG-style HeteroData node export (reference S11,
     * hierarchical_graph.py:398-427): per-type CONTIGUOUS local indices —
     * the tensor row index — assigned by the per-group bucketed assigner
     * (no global or per-type single-task window), plus the global id for
     * joining back. */
   private def qPygNodes(s: SparkSession, dir: String): DataFrame =
-    pygLocal(s, dir).select(col("node_type"), col("local_idx"),
+    graft.graph.Pipeline.pygLocal(s, dir).select(col("node_type"), col("local_idx"),
       col("node_id"), col("canonical_name"))
 
   /** PyG-style typed edge index (reference HeteroData edge_index per
@@ -723,7 +708,7 @@ object SparkEntry {
     * per-type local indices via skew-safe joins, deduped with a
     * multiplicity count (edge_index columns + edge weight). */
   private def qPygEdges(s: SparkSession, dir: String): DataFrame = {
-    val loc = pygLocal(s, dir)
+    val loc = graft.graph.Pipeline.pygLocal(s, dir)
     val t = graft.graph.Pipeline.triples(s, dir)
     val src = loc.select(col("canonical_name").as("subj"),
       col("node_type").as("src_type"), col("local_idx").as("src_local"))

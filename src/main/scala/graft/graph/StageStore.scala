@@ -1,9 +1,14 @@
 package graft.graph
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import java.util.UUID
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.schema.{Lineage, Metric}
 
 /** Checkpointed stage tables: every pipeline stage is materialized to a
   * parquet table exactly once and re-read by all consumers.
@@ -17,9 +22,16 @@ import org.apache.spark.sql.functions._
   * tables; parquet directories with `_SUCCESS` carry the equivalent
   * snapshot-commit semantics in this sandbox (SURVEY.md §7.0).
   *
-  * Each commit also appends per-partition lineage rows
-  * (stage, partition_id, rows, wall_ms) and stage-level metric rows —
-  * the north rule's observability requirement.
+  * A stage commits in one rename (see `commit`), together with its
+  * per-partition lineage and stage metrics — the north rule's
+  * observability requirement. Layout:
+  * {{{
+  *   <root>/<base>/<stage>/part-*.parquet, _SUCCESS, _observability.tsv
+  *   <root>/<base>/_<stage>-<uuid>/<stage>/   (a commit in flight)
+  * }}}
+  * `lineage` and `metrics` read the committed stages' observability
+  * files, so a stage has lineage exactly when it is committed, and one
+  * set of it.
   */
 object StageStore {
 
@@ -129,32 +141,57 @@ object StageStore {
   /** Storage backend (parquet here; Iceberg on a cluster — see TableIO). */
   val io: TableIO = ParquetTableIO
 
+  /** Observability file of a stage directory; the leading `_` hides it
+    * from table readers, as it does `_SUCCESS`. */
+  private val ObsFile = "_observability.tsv"
+
   /** Materialize `build` at `<base>/<stage>` unless already committed;
     * return a reader of the committed table. */
   def getOrCreate(spark: SparkSession, inputKey: String, stage: String)(
       build: => DataFrame): DataFrame = {
-    val base = baseFor(inputKey)
-    val dir = s"$base/$stage"
-    if (!io.exists(spark, dir)) {
-      val t0 = System.nanoTime()
-      io.overwrite(build, dir)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      commitObservability(spark, base, stage, dir, wallMs)
-    }
+    val dir = s"${baseFor(inputKey)}/$stage"
+    if (!io.exists(spark, dir)) commit(spark, stage, dir, build)
     io.read(spark, dir)
   }
 
-  /** Per-partition lineage + stage metrics for a committed stage table.
-    * ONE distributed pass: a rollup on spark_partition_id yields the
-    * per-partition counts (lineage) AND the grand-total row (metrics) in
-    * a single job — the previous shape re-read the table a second time
-    * just for the global approx_count_distinct (guide §1.2: don't compute
-    * things twice). The rollup's total grouping merges the same HLL
-    * sketches a direct global aggregate would, so the recorded
-    * approx_distinct_convs value is unchanged. */
-  private def commitObservability(spark: SparkSession, base: String,
-      stage: String, dir: String, wallMs: Long): Unit = {
-    import spark.implicits._
+  /** Commits one stage in one rename:
+    *   1. write the table to `<base>/_<stage>-<uuid>/<stage>`, inside a
+    *      sibling of the stage path;
+    *   2. run the rollup job over the staged table for lineage and metrics;
+    *   3. the driver writes them next to the staged data as [[ObsFile]];
+    *   4. `io.publish` renames the staged table to the stage path, so
+    *      data, `_SUCCESS` and observability appear together or not at all.
+    * A writer that loses a race for the stage path (the rename finds the
+    * stage already there) discards its sibling, and the caller reads the
+    * winner's table. A build that throws leaves no stage directory and no
+    * observability; its sibling is removed here, or, if the process dies,
+    * left behind under a `_` name that no reader lists. */
+  private def commit(spark: SparkSession, stage: String, dir: String,
+      build: => DataFrame): Unit = {
+    // the table sits one level down in the sibling: readers skip a path
+    // whose own name starts with `_`, and the rollup must read the table
+    val sibling = new Path(new Path(dir).getParent, s"_$stage-${UUID.randomUUID()}")
+    val staged = new Path(sibling, stage)
+    val fs = sibling.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val t0 = System.nanoTime()
+      io.overwrite(build, staged.toString)
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val out = fs.create(new Path(staged, ObsFile), false)
+      try out.write(observe(spark, staged.toString, wallMs).getBytes(UTF_8))
+      finally out.close()
+      io.publish(spark, staged.toString, dir)
+    } finally fs.delete(sibling, true)
+  }
+
+  /** Per-partition lineage + stage metrics of the table at `dir`, as the
+    * lines of [[ObsFile]]: `lineage<TAB>partition_id<TAB>output_rows<TAB>
+    * wall_ms` and `metric<TAB>name<TAB>value`. ONE distributed pass: a
+    * rollup on spark_partition_id yields the per-partition counts
+    * (lineage) AND the grand-total row (metrics) in a single job (guide
+    * §1.2: don't compute things twice). The rollup's total grouping merges
+    * the same HLL sketches a direct global aggregate would. */
+  private def observe(spark: SparkSession, dir: String, wallMs: Long): String = {
     val out = io.read(spark, dir)
     val hasConv = out.columns.contains("conv_id")
     val aggCols = count(lit(1)).as("output_rows") +:
@@ -166,37 +203,46 @@ object StageStore {
       .agg(aggCols.head, aggCols.tail: _*)
       .collect()
     val (totals, perPid) = all.partition(_.isNullAt(0))
-    val parts = perPid.map(r => (stage, r.getInt(0), r.getLong(1), wallMs))
-    val rows = parts.map(_._3).sum
+    val parts = perPid.map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val rows = parts.map(_._2).sum
     // entity/conversation cardinality estimate (SURVEY §2.6: metrics use
     // approx_count_distinct — exact distinct would be a full shuffle)
     val approx =
-      if (hasConv)
-        Seq((stage, "approx_distinct_convs", totals.head.getLong(2).toDouble))
+      if (hasConv) Seq("approx_distinct_convs" -> totals.head.getLong(2).toDouble)
       else Nil
-    val metrics = (Seq(
-      (stage, "output_rows", rows.toDouble),
-      (stage, "wall_ms", wallMs.toDouble),
-      (stage, "rows_per_sec", if (wallMs > 0) rows * 1000.0 / wallMs else 0.0))
-      ++ approx)
-      .toDF("stage", "name", "value")
-    // concurrent stage commits (Pipeline.runAll overlaps independent
-    // branches) must not append to the same directory at once: two
-    // concurrent append jobs share one _temporary staging dir and can
-    // clobber each other's task output — serialize the two tiny writes
-    obsLock.synchronized {
-      io.append(parts.toSeq
-        .toDF("stage", "partition_id", "output_rows", "wall_ms").coalesce(1),
-        s"$base/_lineage")
-      io.append(metrics.coalesce(1), s"$base/_metrics")
-    }
+    val metrics = Seq(
+      "output_rows" -> rows.toDouble,
+      "wall_ms" -> wallMs.toDouble,
+      "rows_per_sec" -> (if (wallMs > 0) rows * 1000.0 / wallMs else 0.0)) ++ approx
+    (parts.map { case (pid, n) => s"lineage\t$pid\t$n\t$wallMs\n" } ++
+      metrics.map { case (name, v) => s"metric\t$name\t$v\n" }).mkString
   }
 
-  private val obsLock = new Object
+  /** (stage, fields) of every line of every committed stage's
+    * [[ObsFile]] under the input's base, read by the driver. */
+  private def observations(spark: SparkSession,
+      inputKey: String): Seq[(String, Array[String])] = {
+    val base = new Path(baseFor(inputKey))
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(base)) return Nil
+    fs.listStatus(base).toSeq.map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && fs.exists(new Path(p, ObsFile)))
+      .sortBy(_.getName)
+      .flatMap { p =>
+        val in = fs.open(new Path(p, ObsFile))
+        val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+        text.linesIterator.map(l => (p.getName, l.split("\t"))).toSeq
+      }
+  }
 
   def lineage(spark: SparkSession, inputKey: String): DataFrame =
-    io.read(spark, s"${baseFor(inputKey)}/_lineage")
+    spark.createDataFrame(observations(spark, inputKey).collect {
+      case (stage, Array("lineage", pid, rows, ms)) =>
+        Lineage(stage, pid.toInt, rows.toLong, ms.toLong)
+    })
 
   def metrics(spark: SparkSession, inputKey: String): DataFrame =
-    io.read(spark, s"${baseFor(inputKey)}/_metrics")
+    spark.createDataFrame(observations(spark, inputKey).collect {
+      case (stage, Array("metric", name, v)) => Metric(stage, name, v.toDouble)
+    })
 }

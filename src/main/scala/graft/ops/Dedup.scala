@@ -180,7 +180,7 @@ object Dedup {
     dupClustersWithPairs(docs, null, idCol, textCol, threshold)._2
 
   /** [[dupClusters]] plus the representative-level verified pair frame it
-    * used (exposed so [[dupClustersStaged]] can commit exactly the pairs
+    * used (exposed so Pipeline.dupClusters can commit exactly the pairs
     * the collapse consumed). `stagedPairs` non-null short-circuits the
     * pair derivation with a committed table.
     *
@@ -272,35 +272,6 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
-  /** [[dupClusters]] with the verified pair set routed through a
-    * committed stage table keyed by the corpus dir (VERDICT r04 #5 —
-    * the same move node_clusters made for Lloyd): the
-    * minhash -> candidates -> verify derivation (over exact-dup
-    * representatives — see [[dupClustersWithPairs]]) runs ONCE per
-    * corpus; the CC collapse and any future consumer (a dup-aware
-    * sampler, a pair auditor) re-read the committed (a, b, jaccard)
-    * table. Warm invocations pay one small-table read + the digest
-    * joins + CC rounds only. */
-  def dupClustersStaged(s: org.apache.spark.sql.SparkSession, dir: String,
-      threshold: Double = 0.5): DataFrame = {
-    // the threshold is part of the PAIR SEMANTICS, so it must be part of
-    // the stage identity: without the suffix, a 0.7-threshold caller
-    // after a 0.5 run would silently read 0.5-threshold clusters (and a
-    // first 0.7 run would poison the cache for every default caller)
-    val t = s"t${math.round(threshold * 1e6)}"
-    // two committed tables: dup_pairs is the CONSUMER surface (a
-    // dup-aware sampler / pair auditor reads verified (a, b, jaccard)
-    // rows), dup_clusters the collapse result — warm callers pay ONE
-    // table read, no digest re-derivation, no CC rounds
-    graft.graph.StageStore.getOrCreate(s, dir, s"dup_clusters_$t") {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val pairs = graft.graph.StageStore.getOrCreate(s, dir, s"dup_pairs_$t") {
-        dupClustersWithPairs(docs, null, threshold = threshold)._1
-      }
-      dupClustersWithPairs(docs, pairs, threshold = threshold)._2
-    }
-  }
-
   /** Train↔eval decontamination — the n-gram-overlap scrub every LLM
     * training pipeline runs before training (flag training docs sharing
     * any word n-gram with a benchmark/eval set; 8-grams here, the
@@ -364,21 +335,6 @@ object Dedup {
     }
     withSig.select(col(idCol), inline(array(bandStructs: _*)))
   }
-
-  /** Committed near-dup index of a corpus dir: the minhash band buckets
-    * of the corpus's exact-dup representatives (same pre-collapse as
-    * [[dupClustersWithPairs]] — identical texts index once). Index once,
-    * probe incrementally: the production shape for an append-heavy
-    * corpus, where re-running the full O(corpus) chain per ingest batch
-    * is the thing to avoid. */
-  def dupIndex(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graft.graph.StageStore.getOrCreate(s, dir, "dup_index") {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val reps = docs.select(col("doc_id"), md5(col("text")).as("_h"))
-        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      minhashBuckets(docs.join(reps, Seq("doc_id")))
-    }
 
   /** Probe new documents against a committed corpus index: bucket
     * equi-join -> distinct (new, corpus-rep) candidates -> exact

@@ -70,13 +70,15 @@ case class Edge(
     conv_id: String,
     turn_idx: Int)
 
-/** Per-stage, per-partition lineage row (north-rule requirement);
-  * matches the columns StageStore.commitObservability persists. */
+/** Per-stage, per-partition lineage row (north-rule requirement), as
+  * StageStore.lineage returns it: one row per partition of a committed
+  * stage table, read from the observability file the stage's commit
+  * renamed into place together with the data. */
 case class Lineage(
     stage: String,
     partition_id: Int,
     output_rows: Long,
     wall_ms: Long)
 
-/** Per-stage metric row. */
+/** Per-stage metric row, as StageStore.metrics returns it. */
 case class Metric(stage: String, name: String, value: Double)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** noop-sink isolation of the dup-cluster derivation chain (guide §1.4):
@@ -10,14 +10,7 @@ import org.apache.spark.sql.functions._
 object DedupProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus())
     import graft.ops.Dedup
 
     def time(label: String)(f: => Unit): Unit = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Transcripts
@@ -13,13 +12,7 @@ object MicroProbe {
     val p = args(0).toInt
     val mode = args(1)
     val nConvs = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[$p]")
-      .config("spark.sql.shuffle.partitions", p.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(p)
     // warmup
     Extract.mentions(Transcripts.synthetic(spark, 2000, 12)).count()
     val m = Extract.mentions(Transcripts.synthetic(spark, nConvs, 12))

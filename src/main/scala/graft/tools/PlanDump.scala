@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` of declared queries to files — the
   * optimization-round evidence trail (plans/r06/<query>_<suffix>.txt).
@@ -19,14 +18,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus())
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object PlanSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     val dir = "/root/testdata/sf0.001"
     for (name <- args) {
       println(s"===== $name =====")

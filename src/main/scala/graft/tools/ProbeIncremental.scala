@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B evidence for the checkAgainstIndex candidate pre-filter (VERDICT
@@ -15,14 +14,7 @@ object ProbeIncremental {
     val dir = args.headOption.getOrElse("/tmp/sf1x")
     val batchMod = args.lift(1).map(_.toInt).getOrElse(500)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus())
     import graft.ops.Dedup
 
     // corpus stays a parquet-backed plan so Joins.fitsBroadcast sees real

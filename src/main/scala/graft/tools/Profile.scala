@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Transcripts
 import graft.extract.Extract
 import graft.link.Resolve
@@ -19,14 +18,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus())
 
     val t = Transcripts.fromTpch(spark, sfDir)
     time("transcripts.count")(println("  rows=" + t.count()))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Per-query timing/plan probe against committed stage tables (the
   * intended consumption pattern — Bench measures the cold end-to-end
@@ -14,14 +13,7 @@ object QueryProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus())
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       if (sys.env.contains("GRAFT_PROBE_EXPLAIN"))

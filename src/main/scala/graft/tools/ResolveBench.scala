@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.link.Resolve
 import graft.schema.Mention
@@ -12,14 +11,7 @@ import graft.streaming.StatefulResolve
 object ResolveBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus())
     import spark.implicits._
     val m = graft.graph.Pipeline.mentions(spark, sfDir)
     m.count() // ensure committed + warm fs cache

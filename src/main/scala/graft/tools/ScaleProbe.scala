@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Transcripts
@@ -13,13 +12,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val nConvs = args.headOption.map(_.toLong).getOrElse(500000L)
     for (p <- Seq(8, 32)) {
-      val spark = SparkSession.builder()
-        .master(s"local[$p]")
-        .config("spark.sql.shuffle.partitions", p.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = graft.Session.local(p)
       def time(label: String)(f: => Long): Unit = {
         val t0 = System.nanoTime()
         val n = f

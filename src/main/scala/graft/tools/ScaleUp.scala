@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pressure-test corpus builder: replicate a TPC-H-derived test corpus
@@ -25,14 +25,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val copies = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(), "WARN")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Transcripts
@@ -29,15 +28,8 @@ object Scaling {
   }
 
   def runAt(parallelism: Int, nConvs: Long, turnsPerConv: Int): Run = {
-    val spark = SparkSession.builder()
-      .master(s"local[$parallelism]")
-      .appName(s"graft-scaling-$parallelism")
-      .config("spark.sql.shuffle.partitions", parallelism.toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(parallelism)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       def phase[A](label: String)(f: => A): A = {
         val p0 = System.nanoTime()
@@ -105,12 +97,7 @@ object Scaling {
     if (args.headOption.contains("control")) {
       val p = args(1).toInt
       val n = args.lift(2).map(_.toLong).getOrElse(4000000000L)
-      val spark = SparkSession.builder()
-        .master(s"local[$p]")
-        .config("spark.sql.shuffle.partitions", p.toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = graft.Session.local(p)
       spark.range(n min 100000000L) // untimed JIT warmup
         .select(expr("bit_xor(xxhash64(id))")).collect()
       val t0 = System.nanoTime()

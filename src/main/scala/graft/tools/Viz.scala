@@ -105,12 +105,7 @@ object Viz {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/tmp/graft_subgraph.html")
     val k = args.lift(2).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(8))
     export(spark, sfDir, out, k)
     println(s"[viz] wrote $out")
     spark.stop()

@@ -9,16 +9,6 @@ import graft.graph.{Pipeline, StageStore}
   * "resumable from checkpoint with per-partition lineage + metrics"). */
 class PipelineSpec extends SparkSpec {
 
-  private def withStageRoot[A](f: => A): A = {
-    val dir = Files.createTempDirectory("graft_test_stages").toString
-    val old = sys.props.get("graft.stage.dir")
-    sys.props("graft.stage.dir") = dir
-    try f finally old match {
-      case Some(v) => sys.props("graft.stage.dir") = v
-      case None => sys.props.remove("graft.stage.dir")
-    }
-  }
-
   test("stages are computed once and reused; pipeline is resumable") {
     withStageRoot {
       val sfDir = "/root/testdata/sf0.001"
@@ -31,6 +21,21 @@ class PipelineSpec extends SparkSpec {
       val n2 = Pipeline.runAll(spark, sfDir)
       assert(n2 === n1, "resumed run must reuse committed stages")
       assert(spark.read.parquet(s"$base/mentions").count() === marker)
+    }
+  }
+
+  test("a rebuilt stage carries exactly one set of lineage rows") {
+    withStageRoot {
+      val sfDir = "/root/testdata/sf0.001"
+      Pipeline.mentions(spark, sfDir)
+      val dir = new org.apache.hadoop.fs.Path(StageStore.baseFor(sfDir), "mentions")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+      val rows = Pipeline.mentions(spark, sfDir).count()
+      val lin = StageStore.lineage(spark, sfDir).filter(col("stage") === "mentions")
+      val pids = lin.select("partition_id").collect().map(_.getInt(0))
+      assert(pids.length > 0 && pids.distinct.length === pids.length,
+        "one lineage row per partition of the rebuilt table")
+      assert(lin.agg(sum("output_rows")).head.getLong(0) === rows)
     }
   }
 

@@ -34,6 +34,17 @@ trait SparkSpec extends AnyFunSuite {
       s"missing=${missing.take(5)} extra=${extra.take(5)}")
   }
 
+  /** Runs `f` with a fresh temp directory as the stage root. */
+  def withStageRoot[A](f: => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_test_stages").toString
+    val old = sys.props.get("graft.stage.dir")
+    sys.props("graft.stage.dir") = dir
+    try f finally old match {
+      case Some(v) => sys.props("graft.stage.dir") = v
+      case None => sys.props.remove("graft.stage.dir")
+    }
+  }
+
   import java.sql.Timestamp
   def turns(rows: (String, Int, String)*): DataFrame = {
     // (conv_id, turn_idx, text) with synthetic role/tool/ts

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Transcripts
 import graft.extract.Extract
+import graft.graph.Pipeline
 import graft.link.Resolve
-import graft.canonical.{Canonical, ConnectedComponents}
+import graft.canonical.{Canonical, ConnectedComponents, Joins}
 import graft.version.Versions
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -25,366 +26,43 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     qEdges(spark, "/root/testdata/sf0.001")
 
-  // ---- pipeline stages wired over the sfDir-derived transcripts ----
+  /** Every driver query: the `kg_*` family below, the `doc_*`/`emb_*`
+    * family ([[OpsEntry]]) and the `ev_*`/`rel_*` family ([[RelEntry]]). */
+  private[graft] lazy val registry: Seq[Query] =
+    kg ++ OpsEntry.registry ++ RelEntry.registry
 
-  /** Every query reads the checkpointed stage tables (graph.Pipeline):
-    * the mentions/resolved stages are the shared upstream of all 13
-    * queries and each plan would otherwise re-derive them several times
-    * (entity vocabulary, bindings, relations, self map). Stage tables are
-    * computed exactly once per corpus — the same property that makes the
-    * pipeline resumable (north rule). */
-  private def mentionsOf(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.mentions(s, dir)
+  /** Spark body of every driver query, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** Committed transcripts stage table (computed once per corpus); the
-    * 7 transcript-consuming queries read it instead of re-deriving the
-    * orders⋈lineitem join + per-order window each (VERDICT r02 #3). */
-  private def transcriptsOf(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.transcripts(s, dir)
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
+    * same parquet tables. */
+  def oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 
-  private def resolvedOf(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.resolved(s, dir)
+  // ---- Spark helpers shared by several kg_* queries ----
+  //
+  // Every query reads the committed stage tables (graph.Pipeline): the
+  // mentions/resolved stages are the shared upstream of most queries, and
+  // each plan would otherwise re-derive them several times. Stage tables
+  // are computed exactly once per corpus — the same property that makes the
+  // pipeline resumable (north rule).
 
   private def long(c: String) = col(c).cast("long").as(c)
 
-  private def qTranscripts(s: SparkSession, dir: String): DataFrame =
-    transcriptsOf(s, dir).select(
-      col("conv_id"), long("turn_idx"), col("role"), col("text"), col("tool"),
-      date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
-
-  private def qMentions(s: SparkSession, dir: String): DataFrame =
-    mentionsOf(s, dir).select(
-      col("conv_id"), long("turn_idx"), long("mention_idx"),
-      col("kind"), col("subj"), col("pred"), col("obj"), col("attr"),
-      col("parent"), long("hop"))
-
-  private def qBindings(s: SparkSession, dir: String): DataFrame =
-    Resolve.bindings(mentionsOf(s, dir)).select(
-      col("conv_id"), long("turn_idx"), long("mention_idx"),
-      col("ref"), col("target"))
-
-  private def qResolved(s: SparkSession, dir: String): DataFrame =
-    resolvedOf(s, dir).select(
-      col("conv_id"), long("turn_idx"), long("mention_idx"),
-      col("subj"), col("pred"), col("obj"))
-
-  private def qTriples(s: SparkSession, dir: String): DataFrame = {
-    graft.graph.Pipeline.triples(s, dir).select(
-      col("conv_id"), long("turn_idx"), long("mention_idx"),
-      col("subj"), col("pred"), col("obj"))
-  }
-
-  /** Per-conversation KG telemetry off the committed triples table: the
-    * graph-side analog of the corpus curation stats (which conversations
-    * are triple-dense / entity-diverse — the per-document fact table a
-    * KG-quality dashboard reads). The three distinct counts are
-    * `size(collect_set(...))` — exactly count_distinct, but in ONE
-    * map-side-combinable aggregation over the raw rows instead of the
-    * multi-distinct Expand plan that shuffled every triple 4x (guide
-    * §2.3 shuffle fewer bytes; set state is bounded by the
-    * per-conversation fan-in, which is turns-per-conv — skew-free at any
-    * corpus size). */
-  private def qConvStats(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.triples(s, dir)
-      .groupBy(col("conv_id"))
-      .agg(count(lit(1)).as("n_triples"),
-        size(collect_set(col("pred"))).cast("long").as("n_preds"),
-        size(collect_set(col("subj"))).cast("long").as("n_subjects"),
-        size(collect_set(col("obj"))).cast("long").as("n_objects"),
-        max(col("turn_idx")).cast("long").as("max_turn"))
-
-  private def qNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.nodes(s, dir)
-
-  private def qNodesMinted(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.mintedNodes(s, dir)
-
-  private def qEdges(s: SparkSession, dir: String): DataFrame = {
-    graft.graph.Pipeline.edges(s, dir).select(
+  /** kg_edges, also the flagship [[entry]]. */
+  private def qEdges(s: SparkSession, dir: String): DataFrame =
+    Pipeline.edges(s, dir).select(
       col("edge_type"), col("src_type"), col("src_id"),
       col("dst_type"), col("dst_id"),
       col("conv_id"), long("turn_idx"), long("mention_idx"))
-  }
 
-  private def qAliasGroups(s: SparkSession, dir: String): DataFrame =
-    Canonical.aliasGroups(mentionsOf(s, dir))
-
-  /** Node property richness (reference nodes carry code/docstring/location
-    * properties, call_graph.py:492-540): nodes with a struct-typed props
-    * column aggregated from their definition mentions. Container-only
-    * nodes (never defined) get default props via the left join.
-    * The struct stays an engine-internal cell; the comparison boundary is
-    * scalar (the driver's comparator sorts raw cells, which a struct/array
-    * cell can never satisfy — CORRECTNESS_r02 err rows). */
-  private def qNodesRich(s: SparkSession, dir: String): DataFrame = {
-    val stats = mentionsOf(s, dir).filter(col("kind") === "entity_def")
-      .groupBy(col("subj").as("canonical_name"))
-      .agg(count(lit(1)).cast("long").as("n_defs"),
-        min(col("conv_id")).as("first_conv"),
-        max(col("attr")).as("max_attr"))
-    graft.graph.Pipeline.nodes(s, dir)
-      .join(stats, Seq("canonical_name"), "left")
-      .select(col("node_id"), col("canonical_name"), col("node_type"),
-        struct(
-          coalesce(col("n_defs"), lit(0L)).as("n_defs"),
-          coalesce(col("first_conv"), lit("")).as("first_conv"),
-          coalesce(col("max_attr"), lit("")).as("max_attr")).as("props"))
-      .select(col("node_id"), col("canonical_name"), col("node_type"),
-        col("props.n_defs").as("n_defs"),
-        col("props.first_conv").as("first_conv"),
-        col("props.max_attr").as("max_attr"))
-  }
-
-  /** Turn classifier (S2: the config-file classifier analog) — a pure
-    * when-chain over tool/text content, no UDF. */
-  private def qTurnRoles(s: SparkSession, dir: String): DataFrame =
-    transcriptsOf(s, dir).select(
-      col("conv_id"), long("turn_idx"),
-      when(col("tool") =!= "", "tool_call")
-        .when(col("text").startsWith("define entity"), "definition")
-        .when(col("text").startsWith("link ") || col("text").startsWith("chain "), "relation")
-        .otherwise("narration").as("turn_class"))
-
-  /** Identifier-split vocabulary (X5): canonical names broken into
-    * lowercase words (dots/snake/camel/ACRONYM), top-5 per node type —
-    * through the size-gated TopK helper, so a corpus-scale word
-    * vocabulary never sorts one node_type's full word set on a single
-    * window task (VERDICT r05 #7). */
-  private def qNameWords(s: SparkSession, dir: String): DataFrame =
-    graft.canonical.TopK.perGroup(
-      graft.graph.Pipeline.nodes(s, dir)
-        .select(col("node_type"),
-          explode(graft.ops.TextOps.identifierWords(col("canonical_name"))).as("word"))
-        .groupBy("node_type", "word").agg(count(lit(1)).as("n")),
-      Seq("node_type"), Seq(col("n").desc, col("word")), 5, "rk")
-
-  private def qHierarchyNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.hierNodes(s, dir)
-
-  private def qHierarchyEdges(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Hierarchy.edges(transcriptsOf(s, dir),
-      graft.graph.Pipeline.hierNodes(s, dir))
-
-  private def qSegmentNodes(s: SparkSession, dir: String): DataFrame =
-    Extract.segmentNodes(transcriptsOf(s, dir)).select(
-      col("conv_id"), long("turn_idx"), long("seg_idx"), col("kind"))
-
-  private def qSegmentEdges(s: SparkSession, dir: String): DataFrame =
-    // single derivation: segmentEdges now fetches the destination label
-    // via lead(kind) on the same window, so there is no second consumer
-    // of the posexplode (and nothing to checkpoint)
-    Extract.segmentEdges(Extract.segmentNodes(transcriptsOf(s, dir)))
-      .select(col("conv_id"), long("turn_idx"), long("src_seg"),
-        long("dst_seg"), col("src_kind"), col("dst_kind"))
-
-  /** Segment↔entity bridge (reference subgraph_function_edges /
-    * function_subgraph_edges, hierarchical_graph.py:182-183): each
-    * entity-definition segment joined to the mention at the same
-    * (conv_id, turn_idx, seg_idx == mention_idx) — the extraction
-    * guarantees positional alignment between a turn's segment list and
-    * its mention list — then remapped to the dense node ID, emitted in
-    * BOTH directions so a consumer can navigate entity→segment as well
-    * as segment→entity (closes the last disjoint ID space, VERDICT r03
-    * missing #2). The node remap is size-gated + salted (a hot entity is
-    * defined in many segments). */
-  private def qSegmentEntityEdges(s: SparkSession, dir: String): DataFrame = {
-    val segs = Extract.segmentNodes(transcriptsOf(s, dir))
-      .filter(col("kind") === "entity_def")
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
-        col("seg_idx").cast("long").as("seg_idx"))
-    val defs = mentionsOf(s, dir).filter(col("kind") === "entity_def")
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
-        col("mention_idx").cast("long").as("seg_idx"),
-        col("subj").as("canonical_name"))
-    val linked = segs.join(defs, Seq("conv_id", "turn_idx", "seg_idx"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
-      .select(col("canonical_name"), col("node_id"))
-    val withId = graft.canonical.Joins
-      .innerSkewSafe(linked, n, "canonical_name", saltFrom = Seq("conv_id"))
-    // one pass: a self-union would re-execute the whole join pipeline
-    // per direction — the direction label is a 2-element explode instead
-    withId.select(
-      explode(array(lit("segment_defines"), lit("defined_in_segment")))
-        .as("edge_type"),
-      col("conv_id"), col("turn_idx"), col("seg_idx"),
-      col("node_id"), col("canonical_name"))
-  }
-
-  private def qTurnEdges(s: SparkSession, dir: String): DataFrame =
-    Extract.turnOrderEdges(transcriptsOf(s, dir)).select(
-      col("conv_id"), long("turn_idx"), long("next_turn_idx"))
-
-  private def qVersionNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.versionNodes(s, dir).select(
-      col("entity"), col("version_seq"), col("ts_s"), col("body_hash"),
-      col("state"), col("conv_id"), long("turn_idx"))
-
-  private def qVersionEdges(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.versionEdges(s, dir).select(
-      col("entity"), col("src_seq"), col("dst_seq"),
-      col("conv_id"), long("turn_idx"), col("body_hash"))
-
-  private def qVersionLatest(s: SparkSession, dir: String): DataFrame =
-    Versions.latestVersions(graft.graph.Pipeline.versionNodes(s, dir))
-
-  /** Cross-conversation entity resolution: customers co-referenced through
-    * shared unknown items (the minted entities) form one canonical group —
-    * connected components over the co-reference graph (north rule's
-    * "connected-components entity resolution"). The pk-filter keeps the
-    * graph sparse enough that component structure is non-trivial. */
-  private def qComponents(s: SparkSession, dir: String): DataFrame = {
-    val itemPk = regexp_extract(col("obj"), "^item:unknown_([0-9]+)$", 1)
-    val corefs = resolvedOf(s, dir)
-      .filter(col("pred") === "mentions" &&
-        itemPk =!= "" && itemPk.cast("long") % 20 === 0)
-      .select(col("subj"), col("obj"))
-      .distinct()
-    val allNodes = qNodes(s, dir).unionByName(qNodesMinted(s, dir))
-      .select(col("canonical_name"), col("node_id"))
-    // node table scales with the corpus: size-gated remap (broadcast while
-    // small, salted shuffle join above the gate — Joins.remapBoth)
-    val edges = graft.canonical.Joins.remapBoth(
-      corefs, allNodes, "canonical_name", "node_id",
-      "subj", "obj", "src", "dst")
-      .select(col("src"), col("dst"))
-    val verts = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-    ConnectedComponents.runWithNodes(verts, edges)
-      .join(graft.canonical.Joins.dim(allNodes), col("id") === col("node_id"))
-      .select(col("node_id"), col("canonical_name"), col("component"))
-  }
-
-  /** Degree distribution over the emitted graph (per-node in/out degree —
-    * the first analytic a KG consumer runs; also exercises the unified
-    * edges table as a source). */
-  private def qDegrees(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.graph.Pipeline.edges(s, dir)
-    val n = graft.graph.Pipeline.nodes(s, dir)
-    val outD = e.groupBy(col("src_id").as("node_id"))
-      .agg(count(lit(1)).as("out_deg"))
-    val inD = e.groupBy(col("dst_id").as("node_id"))
-      .agg(count(lit(1)).as("in_deg"))
-    n.join(outD, Seq("node_id"), "left")
-      .join(inD, Seq("node_id"), "left")
-      .select(col("node_id"), col("canonical_name"),
-        coalesce(col("out_deg"), lit(0L)).as("out_deg"),
-        coalesce(col("in_deg"), lit(0L)).as("in_deg"))
-  }
-
-  /** Fixed-point integer PageRank over the emitted edge table (graph
-    * analytics beyond degrees — the networkx-style consumption the
-    * reference's Neo4j export exists for, run IN the engine): 5
-    * iterations, multi-edges count, deterministic at any partitioning
-    * (graph/Analytics.pageRank — long sums + floor division only). */
-  private def qPageRank(s: SparkSession, dir: String): DataFrame = {
-    val pr = graft.graph.Analytics.pageRank(graft.graph.Pipeline.edges(s, dir))
-    val n = graft.graph.Pipeline.nodes(s, dir)
-      .select(col("node_id"), col("canonical_name"))
-    // both sides node-cardinality and distinct per key: plain equi join
-    pr.join(n, Seq("node_id"))
-      .select(col("node_id"), col("canonical_name"), col("pr"))
-  }
-
-  /** Static question rows × node-type cross product (the reference's
-    * question_nodes × cluster pattern, knowledge_graph.py:1513-1532 /
-    * SURVEY J12): a small driver-side table crossed against a distinct
-    * projection of the graph. */
-  private def qQuestions(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val questions = Seq((0L, "what"), (1L, "how"), (2L, "when"), (3L, "where"))
-      .toDF("q_id", "q_kind")
-    val types = graft.graph.Pipeline.nodes(s, dir).select("node_type").distinct()
-    questions.crossJoin(types)
-  }
-
-  /** Question→cluster edges (reference question_cluster_edges — the full
-    * question × cluster cross product, knowledge_graph.py:1522-1530,
-    * J12): every static question node links to every semantic cluster.
-    * Both sides are bounded vocabularies, so the cross join broadcasts. */
-  private def qQuestionClusterEdges(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val questions = Seq((0L, "what"), (1L, "how"), (2L, "when"), (3L, "where"))
-      .toDF("q_id", "q_kind")
-    val clusters = nodeClusters(s, dir)
-      .select(col("cluster").cast("long").as("cluster_id")).distinct()
-    questions.crossJoin(clusters)
-  }
-
-  /** Fuzzy entity linking (the profiled hot stage): deterministic noisy
-    * surface forms (part names with the last character clipped; every 3rd
-    * kept exact) linked back to the canonical part-name dictionary via
-    * broadcast exact match + trigram-MinHash blocking + Jaccard scoring. */
-  private def qFuzzyLink(s: SparkSession, dir: String): DataFrame = {
-    val p = s.read.parquet(s"$dir/part.parquet")
-    val pname = regexp_replace(col("p_name"), " ", "_")
-    val surfaces = p.select(
-      when(col("p_partkey") % 3 === 0, pname)
-        .otherwise(pname.substr(lit(1), length(pname) - 1)).as("surface"))
-      .distinct()
-    val dict = p.select(pname.as("name")).distinct()
-    graft.link.FuzzyLink.link(surfaces, dict)
-  }
-
-  /** Grouped membership lists (reference import grouping's
-    * `import_file_ids: list`, knowledge_graph.py:933-941): per entity, the
-    * sorted set of conversations that define it — an ArrayType cell.
-    * Aggregated in two phases through Salt.twoPhaseAgg (partial
-    * collect_set by (key, salt), then merge) so one hot entity's state
-    * never accumulates on a single reducer. The ArrayType cell stays
-    * engine-internal; the comparison boundary is the scalar
-    * `array_join` form (driver comparator sorts raw cells —
-    * CORRECTNESS_r02 err row). */
-  private def qEntityConvs(s: SparkSession, dir: String): DataFrame = {
-    val defs = mentionsOf(s, dir)
-      .filter(col("kind") === "entity_def")
-      .select(col("subj").as("canonical_name"), col("conv_id"))
-    graft.canonical.Salt.twoPhaseAgg(defs, "canonical_name", s = 8,
-      saltFrom = Seq("conv_id"))(
-      partial = Seq(collect_set(col("conv_id")).as("cs")),
-      merge = Seq(sort_array(array_distinct(flatten(collect_list(col("cs")))))
-        .as("conv_ids")))
-      .select(col("canonical_name"),
-        array_join(col("conv_ids"), ",").as("conv_ids_csv"),
-        size(col("conv_ids")).cast("long").as("n_convs"))
-  }
-
-  /** Container/inheritance edges (reference class_class_edges
-    * 'inherits_from' + the reverse 'contains' direction,
-    * knowledge_graph.py:1122-1197): distinct (child, parent) pairs from
-    * `extends` clauses, remapped to dense node IDs with size-gated joins. */
-  private def qContainment(s: SparkSession, dir: String): DataFrame = {
-    val pairs = mentionsOf(s, dir)
-      .filter(col("kind") === "entity_def" && col("parent") =!= "")
-      .select(col("subj").as("child"), col("parent"))
-      .distinct()
-    val both = graft.canonical.Joins.remapBoth(pairs,
-      graft.graph.Pipeline.nodes(s, dir), "canonical_name", "node_id",
-      "child", "parent", "child_id", "parent_id")
-    // one pass for both directions (a self-union re-executes the remap
-    // joins per direction — same fix as qSegmentEntityEdges)
-    both.select(explode(array(
-      struct(lit("inherits_from").as("edge_type"),
-        col("child_id").as("src_id"), col("parent_id").as("dst_id"),
-        col("child").as("src_name"), col("parent").as("dst_name")),
-      struct(lit("contains").as("edge_type"),
-        col("parent_id").as("src_id"), col("child_id").as("dst_id"),
-        col("parent").as("src_name"), col("child").as("dst_name"))))
-      .as("e"))
-      .select(col("e.edge_type"), col("e.src_id"), col("e.dst_id"),
-        col("e.src_name"), col("e.dst_name"))
-  }
-
-  /** Side-table linking (reference issue_function_edges,
-    * knowledge_graph.py:1282-1351): extract `ref #N` cross-references from
-    * transcript text (regexp_extract_all -> explode), validate membership
-    * against the issues side table, attach to the entity ordered in the
-    * same turn, dedupe. */
   /** `ref #N` cross-references per (conv, turn) — the one extraction
     * grammar shared by BOTH issue edge families (issue→entity and
     * issue→PR); keep it single-sourced so the ref grammar can never
     * desynchronize between them. */
   private def issueRefsOf(s: SparkSession, dir: String): DataFrame =
-    transcriptsOf(s, dir).select(
+    Pipeline.transcripts(s, dir).select(
       col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
       explode(regexp_extract_all(col("text"), lit("ref #([0-9]+)"), lit(1))).as("r"))
       .select(col("conv_id"), col("turn_idx"), col("r").cast("long").as("issue_id"))
@@ -400,377 +78,16 @@ object SparkEntry {
         element_at(array(lit("open"), lit("closed"), lit("merged")),
           (col("issue_id") % 3 + 1).cast("int")))
 
-  /** Rich issue properties (reference issue_nodes carry title/body/
-    * labels:list<str> and comments:list<struct{id,user,created_at,
-    * updated_at,body}> — its richest cell type, knowledge_graph.py:
-    * 669-700): one row per issue with deterministic title/body/state, the
-    * sorted label set, and a comments ArrayType(StructType) column built
-    * by sort_array(collect_list(struct(...))) — one comment per part row
-    * mapping to the issue. The array/struct cells stay engine-internal;
-    * the comparison boundary is scalar: label CSV + counts + md5 of the
-    * canonical to_json rendering of the sorted comments array (X8's
-    * to_json direction — the oracle reconstructs the identical compact
-    * JSON string via string_agg, so the hash certifies every nested
-    * field). The groupBy key (issue_id) has bounded fan-in (parts per
-    * issue), map-side combinable collect_list state. */
-  private def qIssueNodesRich(s: SparkSession, dir: String): DataFrame = {
-    val epoch = to_date(lit("1995-01-01"))
-    val base = s.read.parquet(s"$dir/part.parquet").select(
-      (col("p_partkey") % 997).cast("long").as("issue_id"),
-      col("p_partkey").cast("long").as("cid"),
-      regexp_replace(col("p_brand"), "[ #]", "_").as("label"),
-      regexp_replace(col("p_name"), " ", "_").as("pname"))
-    val withC = base.select(col("issue_id"), col("label"), col("pname"),
-      struct(
-        col("cid"),
-        concat(lit("dev_"), (col("cid") % 25).cast("string")).as("cuser"),
-        date_format(date_add(epoch, (col("cid") % 1000).cast("int")),
-          "yyyy-MM-dd").as("created_at"),
-        date_format(date_add(epoch, (col("cid") % 1000 + 7).cast("int")),
-          "yyyy-MM-dd").as("updated_at"),
-        concat(lit("comment on "), col("pname")).as("body")).as("c"))
-    withC.groupBy(col("issue_id"))
-      .agg(sort_array(collect_list(col("c"))).as("comments"),
-        sort_array(collect_set(col("label"))).as("labels"),
-        min(col("pname")).as("first_part"))
-      .select(col("issue_id"),
-        concat(lit("Issue #"), col("issue_id").cast("string")).as("title"),
-        concat(lit("Tracking "), col("first_part")).as("body"),
-        element_at(array(lit("open"), lit("closed"), lit("merged")),
-          (col("issue_id") % 3 + 1).cast("int")).as("state"),
-        array_join(col("labels"), ",").as("labels_csv"),
-        size(col("labels")).cast("long").as("n_labels"),
-        size(col("comments")).cast("long").as("n_comments"),
-        md5(to_json(col("comments"))).as("comments_hash"))
-  }
-
-  private def qIssueEdges(s: SparkSession, dir: String): DataFrame = {
-    val valid = issueRefsOf(s, dir)
-      .join(graft.canonical.Joins.dim(issuesOf(s, dir)), Seq("issue_id"))
-    val ordered = graft.graph.Pipeline.triples(s, dir)
-      .filter(col("pred") === "ordered")
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
-        col("obj").as("canonical_name"))
-    val linked = valid.join(ordered, Seq("conv_id", "turn_idx"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
-      .select(col("canonical_name"), col("node_id"))
-    graft.canonical.Joins
-      .innerSkewSafe(linked, n, "canonical_name", saltFrom = Seq("conv_id"))
-      .select(col("issue_id"), col("state"), col("node_id"), col("canonical_name"))
-      .distinct()
-  }
-
-  /** Hierarchy↔entity bridge (reference file_function_edges,
-    * knowledge_graph.py:953-1040): `conv:<id> contains_entity <node>` for
-    * every entity defined in that conversation — the edge family that lets
-    * a consumer navigate from a browse-hierarchy folder into the entity
-    * graph (the two ID spaces were disconnected before, VERDICT r02
-    * missing #1). Both remaps are size-gated. */
-  private def qConvEntityEdges(s: SparkSession, dir: String): DataFrame = {
-    val defs = mentionsOf(s, dir).filter(col("kind") === "entity_def")
-      .select(col("conv_id"), col("subj").as("canonical_name")).distinct()
-    val n = graft.graph.Pipeline.nodes(s, dir)
-      .select(col("canonical_name"), col("node_id"))
-    val withNode = graft.canonical.Joins
-      .innerSkewSafe(defs, n, "canonical_name", saltFrom = Seq("conv_id"))
-      .withColumn("name", concat(lit("conv:"), col("conv_id")))
-    val hier = graft.graph.Pipeline.hierNodes(s, dir)
-      .filter(!col("is_folder")).select(col("name"), col("hier_id"))
-    graft.canonical.Joins
-      .innerSkewSafe(withNode, hier, "name", saltFrom = Seq("canonical_name"))
-      .select(lit("contains_entity").as("edge_type"),
-        col("hier_id"), col("node_id"), col("conv_id"), col("canonical_name"))
-  }
-
   /** Deterministic embedding↔entity key shared by the cluster side-car
     * queries (the reference keys embeddings by function id,
     * semantic_clustering.py:37-66): vec_id == node_id. */
   private def nodeClusters(s: SparkSession, dir: String): DataFrame = {
-    val clusters = graft.graph.Pipeline.nodeClusters(s, dir)
+    val clusters = Pipeline.nodeClusters(s, dir)
       .withColumnRenamed("vec_id", "node_id")
     // both sides corpus-scaling, both distinct per node_id -> plain equi
     // join; AQE picks broadcast only while the cluster side actually fits
-    graft.graph.Pipeline.nodes(s, dir).join(clusters, Seq("node_id"))
+    Pipeline.nodes(s, dir).join(clusters, Seq("node_id"))
   }
-
-  /** Cluster nodes (reference cluster_nodes, knowledge_graph.py:1201-1209):
-    * one row per cluster with its member count and a deterministic
-    * summary — the first member name, standing in for the reference's
-    * LLM-generated cluster_summary (knowledge_graph.py:1275-1276). */
-  private def qClusterNodes(s: SparkSession, dir: String): DataFrame =
-    nodeClusters(s, dir)
-      .groupBy(col("cluster").cast("long").as("cluster_id"))
-      .agg(count(lit(1)).as("n_members"),
-        min(col("canonical_name")).as("cluster_summary"))
-      .select(concat(lit("cluster:"), col("cluster_id").cast("string"))
-        .as("cluster_name"), col("cluster_id"), col("n_members"),
-        col("cluster_summary"))
-
-  /** Cluster→entity edges (reference cluster_function_edges,
-    * knowledge_graph.py:1210-1218, J8): every embedded node linked to its
-    * semantic cluster. */
-  private def qClusterEdges(s: SparkSession, dir: String): DataFrame =
-    nodeClusters(s, dir).select(
-      lit("in_cluster").as("edge_type"),
-      concat(lit("cluster:"), col("cluster").cast("string")).as("cluster_name"),
-      col("cluster").cast("long").as("cluster_id"),
-      col("node_id"), col("canonical_name"))
-
-  /** PR/developer side-table analog (reference pr_nodes + developer FKs,
-    * knowledge_graph.py:704-752, 1355-1481): one "pull request" per
-    * supplier, linked to its supplier node, carrying a NULLABLE long
-    * property (`merged_by`) — the reference's nullable Int64 FK coercion
-    * (knowledge_graph.py:274-279). NULLs cross the comparison boundary. */
-  private def qPrEdges(s: SparkSession, dir: String): DataFrame = {
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
-      col("s_suppkey").cast("long").as("pr_id"),
-      concat(lit("supplier:"), col("s_name")).as("canonical_name"),
-      when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
-        .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
-      .select(col("canonical_name"), col("node_id"))
-    // prs is distinct per canonical_name (one PR per supplier): gate the
-    // node-table hint, no salting needed
-    prs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
-      .select(col("pr_id"), col("node_id"), col("canonical_name"),
-        col("merged_by"))
-  }
-
-  /** Rich PR properties (reference pr_nodes carry pr_title/pr_body/
-    * pr_open plus comments CAPPED AT 3 PER PR, knowledge_graph.py:
-    * 704-752 + 777-780 — the one §2.8 O-row shape, O3, the issue side
-    * doesn't exercise): one "pull request" per supplier with
-    * deterministic title/body/open flag, the nullable merged_by FK
-    * (same coercion as [[qPrEdges]]), and a comments
-    * ArrayType(StructType) column built by
-    * `slice(sort_array(collect_list(struct(...))), 1, 3)` — collect,
-    * total order, keep the first three. Every struct field is a pure
-    * function of (l_orderkey, l_linenumber), so the corpus's duplicate
-    * (orderkey, linenumber) rows yield IDENTICAL structs and the sort
-    * is unambiguous across engines. Comparison boundary is scalar:
-    * total + kept counts and md5 of the canonical to_json rendering of
-    * the sliced array (the oracle rebuilds the identical compact JSON
-    * via row_number <= 3 + string_agg). Fan-in per PR is lineitems per
-    * supplier — bounded; collect_list state is map-side combinable. */
-  private def qPrNodesRich(s: SparkSession, dir: String): DataFrame = {
-    val epoch = to_date(lit("1995-01-01"))
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
-      col("s_suppkey").cast("long").as("pr_id"),
-      col("s_name"),
-      when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
-        .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
-    val cm0 = s.read.parquet(s"$dir/lineitem.parquet").select(
-      col("l_suppkey").cast("long").as("pr_id"),
-      (col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("cid"),
-      col("l_orderkey").cast("long").as("ok"))
-    val cm = cm0.select(col("pr_id"), struct(
-      col("cid"),
-      concat(lit("dev_"), (col("cid") % 25).cast("string")).as("cuser"),
-      date_format(date_add(epoch, (col("cid") % 1000).cast("int")),
-        "yyyy-MM-dd").as("created_at"),
-      concat(lit("comment on order "), col("ok").cast("string")).as("body"))
-      .as("c"))
-    val agg = cm.groupBy(col("pr_id"))
-      .agg(slice(sort_array(collect_list(col("c"))), 1, 3).as("comments"),
-        count(lit(1)).as("n_comments_total"))
-    prs.join(agg, Seq("pr_id"), "left")
-      .select(col("pr_id"),
-        concat(lit("PR #"), col("pr_id").cast("string")).as("pr_title"),
-        concat(lit("Proposed by "), col("s_name")).as("pr_body"),
-        (col("pr_id") % 4 === 0).cast("long").as("pr_open"),
-        col("merged_by"),
-        coalesce(col("n_comments_total"), lit(0L)).as("n_comments_total"),
-        coalesce(size(col("comments")), lit(0)).cast("long").as("n_comments_kept"),
-        coalesce(md5(to_json(col("comments"))), lit("")).as("comments_hash"))
-  }
-
-  /** Vector property on nodes (reference docstring_embedding,
-    * hierarchical_graph.py:242-257): the node table left-joined to the
-    * embeddings side table on the deterministic vec_id == node_id key.
-    * The ArrayType(Float) column lives on the frame internally; the
-    * comparison boundary is scalar (ppm-quantized CSV + dim count). */
-  private def qNodesVec(s: SparkSession, dir: String): DataFrame = {
-    val e = s.read.parquet(s"$dir/embeddings.parquet").select(
-      col("vec_id").cast("long").as("node_id"), col("embedding"))
-    graft.graph.Pipeline.nodes(s, dir)
-      .join(e, Seq("node_id"), "left")
-      .select(col("node_id"), col("canonical_name"),
-        coalesce(size(col("embedding")), lit(0)).cast("long").as("emb_dim"),
-        coalesce(array_join(transform(col("embedding"),
-          x => round(x.cast("double") * 1e6).cast("long").cast("string")), ","),
-          lit("")).as("emb_csv"))
-  }
-
-  /** Issue→PR bridge (reference issue_to_pr_edges,
-    * knowledge_graph.py:1282-1307): issue numbers cross-referenced in the
-    * turns where a PR's supplier appears, validated against the issues
-    * side table, emitted as distinct (issue, pr) id pairs — the
-    * reference's source/target edge shape. Both dims are size-gated; the
-    * per-supplier fan-in join is salted from conv_id. */
-  private def qIssuePrEdges(s: SparkSession, dir: String): DataFrame = {
-    val valid = issueRefsOf(s, dir).join(
-      graft.canonical.Joins.dim(issuesOf(s, dir).select("issue_id")),
-      Seq("issue_id"))
-    val supplied = graft.graph.Pipeline.triples(s, dir)
-      .filter(col("pred") === "supplies")
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
-        col("subj").as("canonical_name"))
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
-      concat(lit("supplier:"), col("s_name")).as("canonical_name"),
-      col("s_suppkey").cast("long").as("pr_id"))
-    val linked = valid.join(supplied, Seq("conv_id", "turn_idx"))
-    graft.canonical.Joins
-      .innerSkewSafe(linked, prs, "canonical_name", saltFrom = Seq("conv_id"))
-      .select(col("issue_id"), col("pr_id"))
-      .distinct()
-  }
-
-  /** Developer dim (reference developers_df — dev_id/dev_name/dev_email/
-    * dev_full, knowledge_graph.py:1355-1380): one developer per nation,
-    * the PR-author vocabulary. Contact strings are deterministically
-    * built (conditional concat, X-family), never parsed. */
-  private def qDevNodes(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/nation.parquet").select(
-      col("n_nationkey").cast("long").as("dev_id"),
-      col("n_name").as("dev_name"),
-      concat(lower(regexp_replace(col("n_name"), " ", "_")),
-        lit("@dev.example")).as("dev_email"),
-      concat(lit("Team "), col("n_name")).as("dev_full"))
-
-  /** PR-author→function edges (reference dev_edges_df — dev_id, func_id,
-    * pr_number: the PR→func ⋈ PR→author join,
-    * knowledge_graph.py:1407-1417): each PR's linked entity attributed to
-    * the PR author (the supplier's nation). The node side is size-gated. */
-  private def qDevEdges(s: SparkSession, dir: String): DataFrame = {
-    val prs = s.read.parquet(s"$dir/supplier.parquet").select(
-      col("s_suppkey").cast("long").as("pr_number"),
-      col("s_nationkey").cast("long").as("dev_id"),
-      concat(lit("supplier:"), col("s_name")).as("canonical_name"))
-    val n = graft.graph.Pipeline.nodes(s, dir)
-      .select(col("canonical_name"), col("node_id").as("func_id"))
-    prs.join(graft.canonical.Joins.dim(n), Seq("canonical_name"))
-      .select(col("dev_id"), col("func_id"), col("pr_number"))
-  }
-
-  /** Artifact side table (reference artifacts — ID, artifact_name,
-    * artifact_size:int, created_at/updated_at:timestamp,
-    * knowledge_graph.py:852-872): one build artifact per conversation,
-    * carrying the timestamp-typed properties the reference's scraped
-    * artifact rows have. Size is integer-derived so engines agree
-    * exactly; timestamps cross the comparison boundary natively. */
-  private def qArtifactNodes(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/orders.parquet").select(
-      col("o_orderkey").cast("long").as("artifact_id"),
-      concat(lit("artifact-"), col("o_orderkey").cast("string"))
-        .as("artifact_name"),
-      ((col("o_orderkey") % 100000) * 3 + 17).cast("long").as("artifact_size"),
-      col("o_orderdate").cast("timestamp").as("created_at"),
-      // date_add truncates a timestamp input to DATE (midnight) — the
-      // oracle truncates identically (CAST AS DATE + n), so the two
-      // engines agree even on a corpus whose o_orderdate carries a
-      // nonzero time-of-day
-      date_add(col("o_orderdate"), (col("o_orderkey") % 30).cast("int"))
-        .cast("timestamp").as("updated_at"),
-      concat(lit("c"), col("o_orderkey").cast("string")).as("conv_id"))
-
-  /** Config side table + hierarchy linkage (reference config_nodes with
-    * raw file bytes in a cell + file_config_edges,
-    * knowledge_graph.py:1061-1116; content read call_graph.py:166-184):
-    * every tool-bearing turn contributes a config row whose content
-    * travels as a BINARY cell (utf-8 encode); the comparison boundary is
-    * scalar (byte count + md5). Each row links to its conversation's
-    * hierarchy leaf exactly like file_config_edges links configs into the
-    * folder tree. */
-  private def qConfigNodes(s: SparkSession, dir: String): DataFrame = {
-    val t = transcriptsOf(s, dir).filter(col("tool") =!= "")
-      .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
-        col("tool"), encode(col("text"), "UTF-8").as("config"))
-      .withColumn("name", concat(lit("conv:"), col("conv_id")))
-    val hier = graft.graph.Pipeline.hierNodes(s, dir)
-      .filter(!col("is_folder")).select(col("name"), col("hier_id"))
-    graft.canonical.Joins.innerSkewSafe(t, hier, "name", saltFrom = Seq("conv_id"))
-      .select(col("conv_id"), col("turn_idx"), col("tool"), col("hier_id"),
-        octet_length(col("config")).cast("long").as("n_bytes"),
-        md5(col("config")).as("config_hash"))
-  }
-
-  /** PyG-style HeteroData node export (reference S11,
-    * hierarchical_graph.py:398-427): per-type CONTIGUOUS local indices —
-    * the tensor row index — assigned by the per-group bucketed assigner
-    * (no global or per-type single-task window), plus the global id for
-    * joining back. */
-  private def qPygNodes(s: SparkSession, dir: String): DataFrame =
-    graft.graph.Pipeline.pygLocal(s, dir).select(col("node_type"), col("local_idx"),
-      col("node_id"), col("canonical_name"))
-
-  /** PyG-style typed edge index (reference HeteroData edge_index per
-    * (src_type, relation, dst_type) triple): endpoints remapped to the
-    * per-type local indices via skew-safe joins, deduped with a
-    * multiplicity count (edge_index columns + edge weight). */
-  private def qPygEdges(s: SparkSession, dir: String): DataFrame = {
-    val loc = graft.graph.Pipeline.pygLocal(s, dir)
-    val t = graft.graph.Pipeline.triples(s, dir)
-    val src = loc.select(col("canonical_name").as("subj"),
-      col("node_type").as("src_type"), col("local_idx").as("src_local"))
-    val dst = loc.select(col("canonical_name").as("obj"),
-      col("node_type").as("dst_type"), col("local_idx").as("dst_local"))
-    val saltFrom = Seq("conv_id", "turn_idx", "mention_idx")
-    graft.canonical.Joins.innerSkewSafe(
-        graft.canonical.Joins.innerSkewSafe(t, src, "subj", saltFrom),
-        dst, "obj", saltFrom)
-      .groupBy(col("src_type"), col("pred").as("edge_type"),
-        col("dst_type"), col("src_local"), col("dst_local"))
-      .agg(count(lit(1)).as("n_multi"))
-  }
-
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "kg_transcripts" -> (qTranscripts _),
-    "kg_mentions" -> (qMentions _),
-    "kg_bindings" -> (qBindings _),
-    "kg_resolved" -> (qResolved _),
-    "kg_triples" -> (qTriples _),
-    "kg_conv_stats" -> (qConvStats _),
-    "kg_nodes" -> (qNodes _),
-    "kg_nodes_minted" -> (qNodesMinted _),
-    "kg_edges" -> (qEdges _),
-    "kg_alias_groups" -> (qAliasGroups _),
-    "kg_turn_edges" -> (qTurnEdges _),
-    "kg_version_nodes" -> (qVersionNodes _),
-    "kg_version_edges" -> (qVersionEdges _),
-    "kg_version_latest" -> (qVersionLatest _),
-    "kg_components" -> (qComponents _),
-    "kg_fuzzy_link" -> (qFuzzyLink _),
-    "kg_degrees" -> (qDegrees _),
-    "kg_pagerank" -> (qPageRank _),
-    "kg_questions" -> (qQuestions _),
-    "kg_question_cluster_edges" -> (qQuestionClusterEdges _),
-    "kg_containment" -> (qContainment _),
-    "kg_issue_edges" -> (qIssueEdges _),
-    "kg_entity_convs" -> (qEntityConvs _),
-    "kg_segment_nodes" -> (qSegmentNodes _),
-    "kg_segment_edges" -> (qSegmentEdges _),
-    "kg_segment_entity_edges" -> (qSegmentEntityEdges _),
-    "kg_issue_nodes_rich" -> (qIssueNodesRich _),
-    "kg_hierarchy_nodes" -> (qHierarchyNodes _),
-    "kg_hierarchy_edges" -> (qHierarchyEdges _),
-    "kg_nodes_rich" -> (qNodesRich _),
-    "kg_name_words" -> (qNameWords _),
-    "kg_turn_roles" -> (qTurnRoles _),
-    "kg_conv_entity_edges" -> (qConvEntityEdges _),
-    "kg_cluster_nodes" -> (qClusterNodes _),
-    "kg_cluster_edges" -> (qClusterEdges _),
-    "kg_pr_edges" -> (qPrEdges _),
-    "kg_pr_nodes_rich" -> (qPrNodesRich _),
-    "kg_nodes_vec" -> (qNodesVec _),
-    "kg_issue_pr_edges" -> (qIssuePrEdges _),
-    "kg_dev_nodes" -> (qDevNodes _),
-    "kg_dev_edges" -> (qDevEdges _),
-    "kg_artifact_nodes" -> (qArtifactNodes _),
-    "kg_config_nodes" -> (qConfigNodes _),
-    "kg_pyg_nodes" -> (qPygNodes _),
-    "kg_pyg_edges" -> (qPygEdges _),
-  ) ++ OpsEntry.queries ++ RelEntry.queries
 
   // ---- DuckDB oracle (structural reconstruction; never parses text) ----
 
@@ -860,592 +177,1171 @@ object SparkEntry {
       |  UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + (CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 4 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 6 = 0 THEN 1 ELSE 0 END) AS BIGINT), 'narration' FROM li WHERE k % 5 = 0
       |)""".stripMargin
 
-  private val componentsOracle =
-    s"""WITH RECURSIVE $baseCtes,
-      |minted AS (
-      |  SELECT CAST((SELECT count(*) FROM names) + row_number() OVER (ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS node_id,
-      |         canonical_name
-      |  FROM (SELECT DISTINCT 'item:unknown_'||pk AS canonical_name FROM li WHERE k % 4 = 0)
-      |),
-      |allnodes AS (
-      |  SELECT node_id, canonical_name FROM nodes
-      |  UNION ALL SELECT node_id, canonical_name FROM minted
-      |),
-      |ce AS (
-      |  SELECT DISTINCT cust, 'item:unknown_'||pk AS item
-      |  FROM lic WHERE k % 4 = 0 AND pk % 20 = 0
-      |),
-      |eid AS (
-      |  SELECT a.node_id AS src, b.node_id AS dst
-      |  FROM ce
-      |  JOIN allnodes a ON ce.cust = a.canonical_name
-      |  JOIN allnodes b ON ce.item = b.canonical_name
-      |),
-      |und AS (SELECT DISTINCT s, d FROM (
-      |  SELECT src AS s, dst AS d FROM eid UNION ALL SELECT dst, src FROM eid
-      |)),
-      |verts AS (SELECT DISTINCT s AS id FROM und),
-      |reach AS (
-      |  SELECT id, id AS comp FROM verts
-      |  UNION
-      |  SELECT u.d AS id, r.comp FROM reach r JOIN und u ON u.s = r.id WHERE r.comp < u.d
-      |)
-      |SELECT v.id AS node_id, n.canonical_name, x.component
-      |FROM verts v
-      |JOIN (SELECT id, min(comp) AS component FROM reach GROUP BY id) x ON v.id = x.id
-      |JOIN allnodes n ON v.id = n.node_id""".stripMargin
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
-    * same parquet tables. */
-  def oracleSql: Map[String, String] = Map(
-    "kg_transcripts" -> Transcripts.fromTpchOracleSql,
+  /** One per implemented operator from SURVEY.md §2, each Spark body next
+    * to its DuckDB oracle. */
+  private lazy val kg: Seq[Query] = Seq(
+    Query("kg_transcripts", (s, dir) =>
+      Pipeline.transcripts(s, dir).select(
+        col("conv_id"), long("turn_idx"), col("role"), col("text"), col("tool"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s")),
+      Transcripts.fromTpchOracleSql),
 
-    "kg_mentions" -> withBase(
-      """SELECT 'c'||o_orderkey AS conv_id, CAST(0 AS BIGINT) AS turn_idx,
-        |       CAST(1 AS BIGINT) AS mention_idx, 'entity_def' AS kind,
-        |       'customer:'||replace(c_name,' ','_') AS subj, '' AS pred, '' AS obj, '' AS attr, '' AS parent, CAST(0 AS BIGINT) AS hop
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(0 AS BIGINT), 'entity_def', pname, '', '', qty, cat, CAST(0 AS BIGINT) FROM li
-        |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(1 AS BIGINT), 'entity_def', sname, '', '', '', '', CAST(0 AS BIGINT) FROM li
-        |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(2 AS BIGINT), 'alias_binding', 'a'||k, '', pname, '', '', CAST(0 AS BIGINT) FROM li
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(0 AS BIGINT), 'relation', sname, 'supplies', 'a'||k, '', '', CAST(0 AS BIGINT) FROM li
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(1 AS BIGINT), 'relation', 'self', 'ordered', 'a'||k, '', '', CAST(0 AS BIGINT) FROM li
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 AS BIGINT), 'relation', 'a'||k, 'returned_to', sname, '', '', CAST(0 AS BIGINT) FROM li WHERE k % 3 = 0
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END AS BIGINT), 'relation', 'self', 'mentions', 'item:unknown_'||pk, '', '', CAST(0 AS BIGINT) FROM li WHERE k % 4 = 0
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + (CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT), 'relation', 'self', 'reordered', 'a'||k, '', '', CAST(0 AS BIGINT) FROM li WHERE k % 6 = 0
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + (CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT), 'relation', 'a'||k, 'sourced_from', sname, '', '', CAST(1 AS BIGINT) FROM li WHERE k % 6 = 0
-        |""".stripMargin),
-
-    "kg_bindings" -> withBase(
-      """SELECT conv_id, CAST(2*k-1 AS BIGINT) AS turn_idx,
-        |       CAST(2 AS BIGINT) AS mention_idx, 'a'||k AS ref, pname AS target
-        |FROM li""".stripMargin),
-
-    "kg_resolved" -> withBase(
-      """SELECT conv_id, turn_idx, mention_idx, subj, pred, obj FROM triples
-        |UNION ALL
-        |SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END AS BIGINT),
-        |       cust, 'mentions', 'item:unknown_'||pk
-        |FROM lic WHERE k % 4 = 0""".stripMargin),
-
-    "kg_triples" -> withBase(
-      "SELECT conv_id, turn_idx, mention_idx, subj, pred, obj FROM triples"),
-
-    "kg_conv_stats" -> withBase(
-      """SELECT conv_id,
-        |       CAST(count(*) AS BIGINT) AS n_triples,
-        |       CAST(count(DISTINCT pred) AS BIGINT) AS n_preds,
-        |       CAST(count(DISTINCT subj) AS BIGINT) AS n_subjects,
-        |       CAST(count(DISTINCT obj) AS BIGINT) AS n_objects,
-        |       CAST(max(turn_idx) AS BIGINT) AS max_turn
-        |FROM triples GROUP BY conv_id""".stripMargin),
-
-    "kg_nodes" -> withBase(
-      "SELECT node_type, node_id, canonical_name FROM nodes"),
-
-    "kg_nodes_minted" -> withBase(
-      """SELECT 'item' AS node_type,
-        |       CAST((SELECT count(*) FROM names) + row_number() OVER (ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS node_id,
-        |       canonical_name
-        |FROM (SELECT DISTINCT 'item:unknown_'||pk AS canonical_name FROM li WHERE k % 4 = 0)""".stripMargin),
-
-    "kg_edges" -> withBase(
-      """SELECT t.pred AS edge_type,
-        |       ns.node_type AS src_type, ns.node_id AS src_id,
-        |       nd.node_type AS dst_type, nd.node_id AS dst_id,
-        |       t.conv_id, t.turn_idx, t.mention_idx
-        |FROM triples t
-        |JOIN nodes ns ON t.subj = ns.canonical_name
-        |JOIN nodes nd ON t.obj = nd.canonical_name""".stripMargin),
-
-    "kg_alias_groups" -> withBase(
-      """SELECT canonical_name,
-        |       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-        |       min(conv_id) AS first_conv, max(conv_id) AS last_conv
-        |FROM (
-        |  SELECT cust AS canonical_name, conv_id FROM oc
-        |  UNION ALL SELECT pname, conv_id FROM li
-        |  UNION ALL SELECT sname, conv_id FROM li
-        |)
-        |GROUP BY canonical_name""".stripMargin),
-
-    "kg_turn_edges" -> withBase(
-      """SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx,
-        |       CAST(next_turn_idx AS BIGINT) AS next_turn_idx
-        |FROM (
-        |  SELECT conv_id, turn_idx,
-        |         lead(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS next_turn_idx
-        |  FROM (
-        |    SELECT conv_id, 0 AS turn_idx FROM oc
-        |    UNION ALL SELECT conv_id, 2*k-1 FROM li
-        |    UNION ALL SELECT conv_id, 2*k FROM li
-        |  )
-        |)
-        |WHERE next_turn_idx IS NOT NULL""".stripMargin),
-
-    "kg_version_nodes" -> withBase(
-      """SELECT entity, version_seq, ts_s, body_hash, state, conv_id, turn_idx FROM (
-        |  SELECT entity,
-        |         CAST(row_number() OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS BIGINT) AS version_seq,
-        |         strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-        |         sha256(state) AS body_hash, state, conv_id, CAST(turn_idx AS BIGINT) AS turn_idx
-        |  FROM (
-        |    SELECT *, lag(state) OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS prev
-        |    FROM (SELECT pname AS entity, qty AS state, l_shipdate AS ts, conv_id, 2*k-1 AS turn_idx FROM li)
-        |  ) WHERE prev IS NULL OR prev <> state
-        |)""".stripMargin),
-
-    "kg_version_edges" -> withBase(
-      """SELECT entity, version_seq - 1 AS src_seq, version_seq AS dst_seq,
-        |       conv_id, turn_idx, body_hash FROM (
-        |  SELECT entity,
-        |         CAST(row_number() OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS BIGINT) AS version_seq,
-        |         sha256(state) AS body_hash, conv_id, CAST(turn_idx AS BIGINT) AS turn_idx
-        |  FROM (
-        |    SELECT *, lag(state) OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS prev
-        |    FROM (SELECT pname AS entity, qty AS state, l_shipdate AS ts, conv_id, 2*k-1 AS turn_idx FROM li)
-        |  ) WHERE prev IS NULL OR prev <> state
-        |) WHERE version_seq > 1""".stripMargin),
-
-    "kg_version_latest" -> withBase(
-      """SELECT entity, max(version_seq) AS version_seq,
-        |       max_by(state, version_seq) AS state,
-        |       max_by(body_hash, version_seq) AS body_hash FROM (
-        |  SELECT entity,
-        |         CAST(row_number() OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS BIGINT) AS version_seq,
-        |         sha256(state) AS body_hash, state
-        |  FROM (
-        |    SELECT *, lag(state) OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS prev
-        |    FROM (SELECT pname AS entity, qty AS state, l_shipdate AS ts, conv_id, 2*k-1 AS turn_idx FROM li)
-        |  ) WHERE prev IS NULL OR prev <> state
-        |)
-        |GROUP BY entity""".stripMargin),
-
-    "kg_components" -> componentsOracle,
-
-    "kg_turn_roles" -> withBase(
-      """SELECT conv_id, CAST(0 AS BIGINT) AS turn_idx, 'narration' AS turn_class FROM oc
-        |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), 'definition' FROM li
-        |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), 'tool_call' FROM li""".stripMargin),
-
-    "kg_name_words" -> withBase(
-      """, words AS (
-        |  SELECT node_type,
-        |         unnest(list_filter(string_split(lower(
-        |           regexp_replace(regexp_replace(regexp_replace(canonical_name,
-        |             '([A-Z]+)([A-Z][a-z])', '\1 \2', 'g'),
-        |             '([a-z0-9])([A-Z])', '\1 \2', 'g'),
-        |             '[^A-Za-z0-9]+', ' ', 'g')), ' '), w -> w <> '')) AS word
-        |  FROM nodes
-        |),
-        |counted AS (
-        |  SELECT node_type, word, CAST(count(*) AS BIGINT) AS n
-        |  FROM words GROUP BY node_type, word
-        |)
-        |SELECT node_type, word, n, rk FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY node_type ORDER BY n DESC, word) AS BIGINT) AS rk
-        |  FROM counted
-        |) WHERE rk <= 5""".stripMargin),
-
-    "kg_nodes_rich" -> withBase(
-      """, defs AS (
-        |  SELECT cust AS canonical_name, conv_id, '' AS attr FROM oc
-        |  UNION ALL SELECT pname, conv_id, qty FROM li
-        |  UNION ALL SELECT sname, conv_id, '' FROM li
-        |),
-        |stats AS (
-        |  SELECT canonical_name, CAST(count(*) AS BIGINT) AS n_defs,
-        |         min(conv_id) AS first_conv, max(attr) AS max_attr
-        |  FROM defs GROUP BY canonical_name
-        |)
-        |SELECT n.node_id, n.canonical_name, n.node_type,
-        |       coalesce(s.n_defs, 0) AS n_defs,
-        |       coalesce(s.first_conv, '') AS first_conv,
-        |       coalesce(s.max_attr, '') AS max_attr
-        |FROM nodes n LEFT JOIN stats s ON n.canonical_name = s.canonical_name""".stripMargin),
-
-    "kg_hierarchy_nodes" ->
-      s"""WITH $hierNodesCte
-        |SELECT hier_id, name, is_folder FROM hid""".stripMargin,
-
-    "kg_hierarchy_edges" ->
-      s"""WITH $hierNodesCte,
-        |he AS (
-        |  SELECT DISTINCT 'corpus:all' AS src, 'month:'||strftime(o_orderdate,'%Y-%m') AS dst FROM orders
-        |  UNION ALL SELECT 'month:'||strftime(o_orderdate,'%Y-%m'), 'conv:c'||o_orderkey FROM orders
-        |)
-        |SELECT s.hier_id AS src_id, d.hier_id AS dst_id, he.src, he.dst
-        |FROM he
-        |JOIN hid s ON he.src = s.name
-        |JOIN hid d ON he.dst = d.name""".stripMargin,
-
-    "kg_segment_nodes" -> withBase(s", $segsCte\nSELECT conv_id, turn_idx, seg_idx, kind FROM segs"),
-
-    "kg_segment_edges" -> withBase(
-      s""", $segsCte
-        |SELECT conv_id, turn_idx, seg_idx AS src_seg, next_seg AS dst_seg,
-        |       kind AS src_kind, next_kind AS dst_kind
-        |FROM (
-        |  SELECT *, lead(seg_idx) OVER w AS next_seg, lead(kind) OVER w AS next_kind
-        |  FROM segs WINDOW w AS (PARTITION BY conv_id, turn_idx ORDER BY seg_idx)
-        |)
-        |WHERE next_seg IS NOT NULL""".stripMargin),
-
-    "kg_segment_entity_edges" -> withBase(
-      """, sed AS (
-        |  SELECT conv_id, CAST(0 AS BIGINT) AS turn_idx, CAST(1 AS BIGINT) AS seg_idx, cust AS canonical_name FROM oc
-        |  UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(0 AS BIGINT), pname FROM li
-        |  UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(1 AS BIGINT), sname FROM li
-        |),
-        |sej AS (
-        |  SELECT sed.conv_id, sed.turn_idx, sed.seg_idx, n.node_id, sed.canonical_name
-        |  FROM sed JOIN nodes n ON sed.canonical_name = n.canonical_name
-        |)
-        |SELECT 'segment_defines' AS edge_type, conv_id, turn_idx, seg_idx, node_id, canonical_name FROM sej
-        |UNION ALL
-        |SELECT 'defined_in_segment', conv_id, turn_idx, seg_idx, node_id, canonical_name FROM sej""".stripMargin),
-
-    "kg_issue_nodes_rich" ->
-      """WITH base AS (
-        |  SELECT CAST(p_partkey % 997 AS BIGINT) AS issue_id,
-        |         CAST(p_partkey AS BIGINT) AS cid,
-        |         regexp_replace(p_brand, '[ #]', '_', 'g') AS label,
-        |         replace(p_name, ' ', '_') AS pname
-        |  FROM part
-        |),
-        |cm AS (
-        |  SELECT issue_id, cid,
-        |         'dev_'||CAST(cid % 25 AS VARCHAR) AS cuser,
-        |         strftime(DATE '1995-01-01' + CAST(cid % 1000 AS INTEGER), '%Y-%m-%d') AS created_at,
-        |         strftime(DATE '1995-01-01' + CAST(cid % 1000 + 7 AS INTEGER), '%Y-%m-%d') AS updated_at,
-        |         'comment on '||pname AS body
-        |  FROM base
-        |),
-        |cj AS (
-        |  SELECT issue_id,
-        |         '['||string_agg('{"cid":'||cid||',"cuser":"'||cuser||'","created_at":"'||created_at||'","updated_at":"'||updated_at||'","body":"'||body||'"}', ',' ORDER BY cid)||']' AS cjson,
-        |         CAST(count(*) AS BIGINT) AS n_comments
-        |  FROM cm GROUP BY issue_id
-        |),
-        |lb AS (
-        |  SELECT issue_id,
-        |         array_to_string(list_sort(list(DISTINCT label)), ',') AS labels_csv,
-        |         CAST(len(list_distinct(list(label))) AS BIGINT) AS n_labels,
-        |         min(pname) AS first_part
-        |  FROM base GROUP BY issue_id
-        |)
-        |SELECT cj.issue_id,
-        |       'Issue #'||cj.issue_id AS title,
-        |       'Tracking '||lb.first_part AS body,
-        |       CASE CAST(cj.issue_id % 3 AS INT) WHEN 0 THEN 'open' WHEN 1 THEN 'closed' ELSE 'merged' END AS state,
-        |       lb.labels_csv, lb.n_labels, cj.n_comments,
-        |       md5(cj.cjson) AS comments_hash
-        |FROM cj JOIN lb USING(issue_id)""".stripMargin,
-
-    "kg_entity_convs" -> withBase(
-      """SELECT canonical_name,
-        |       array_to_string(list_sort(list_distinct(list(conv_id))), ',') AS conv_ids_csv,
-        |       CAST(len(list_distinct(list(conv_id))) AS BIGINT) AS n_convs
-        |FROM (
-        |  SELECT cust AS canonical_name, conv_id FROM oc
-        |  UNION ALL SELECT pname, conv_id FROM li
-        |  UNION ALL SELECT sname, conv_id FROM li
-        |)
-        |GROUP BY canonical_name""".stripMargin),
-
-    "kg_containment" -> withBase(
-      """, pairs AS (SELECT DISTINCT pname AS child, cat AS parent FROM li),
-        |j AS (
-        |  SELECT p.child, p.parent, nc.node_id AS child_id, np.node_id AS parent_id
-        |  FROM pairs p
-        |  JOIN nodes nc ON p.child = nc.canonical_name
-        |  JOIN nodes np ON p.parent = np.canonical_name
-        |)
-        |SELECT 'inherits_from' AS edge_type, child_id AS src_id, parent_id AS dst_id,
-        |       child AS src_name, parent AS dst_name FROM j
-        |UNION ALL
-        |SELECT 'contains', parent_id, child_id, parent, child FROM j""".stripMargin),
-
-    "kg_issue_edges" -> withBase(
-      """, refs AS (SELECT conv_id, CAST(2*k AS BIGINT) AS turn_idx,
-        |                CAST(pk % 1500 AS BIGINT) AS issue_id, pname
-        |         FROM li WHERE k % 5 = 0),
-        |iss AS (SELECT DISTINCT CAST(p_partkey % 997 AS BIGINT) AS issue_id FROM part),
-        |valid AS (SELECT r.issue_id, r.pname FROM refs r JOIN iss ON r.issue_id = iss.issue_id)
-        |SELECT DISTINCT v.issue_id,
-        |       CASE CAST(v.issue_id % 3 AS INT) WHEN 0 THEN 'open' WHEN 1 THEN 'closed' ELSE 'merged' END AS state,
-        |       n.node_id, n.canonical_name
-        |FROM valid v JOIN nodes n ON v.pname = n.canonical_name""".stripMargin),
-
-    "kg_questions" -> withBase(
-      """SELECT q_id, q_kind, node_type FROM (
-        |  SELECT CAST(0 AS BIGINT) AS q_id, 'what' AS q_kind
-        |  UNION ALL SELECT 1, 'how' UNION ALL SELECT 2, 'when' UNION ALL SELECT 3, 'where'
-        |), (SELECT DISTINCT node_type FROM nodes)""".stripMargin),
-
-    "kg_question_cluster_edges" ->
-      s"""WITH $baseCtes, ${OpsEntry.clusterCtes}
-        |SELECT q_id, q_kind, cluster_id FROM (
-        |  SELECT CAST(0 AS BIGINT) AS q_id, 'what' AS q_kind
-        |  UNION ALL SELECT 1, 'how' UNION ALL SELECT 2, 'when' UNION ALL SELECT 3, 'where'
-        |), (SELECT DISTINCT CAST(a1.cluster AS BIGINT) AS cluster_id
-        |    FROM a1 JOIN nodes n ON a1.vec_id = n.node_id)""".stripMargin,
-
-    "kg_pagerank" -> {
-      def prIter(i: Int): String =
-        s"""pr$i AS (SELECT vn.node_id, CAST(150000 + (85 * coalesce(s.inflow, 0)) // 100 AS BIGINT) AS pr
-          |        FROM vn LEFT JOIN (
-          |          SELECT e.dst_id AS node_id, sum(p.pr // dg.deg) AS inflow
-          |          FROM e JOIN pr${i - 1} p ON e.src_id = p.node_id
-          |          JOIN dg ON e.src_id = dg.src_id
-          |          GROUP BY e.dst_id) s USING(node_id))""".stripMargin
+    Query("kg_mentions", (s, dir) =>
+      Pipeline.mentions(s, dir).select(
+        col("conv_id"), long("turn_idx"), long("mention_idx"),
+        col("kind"), col("subj"), col("pred"), col("obj"), col("attr"),
+        col("parent"), long("hop")),
       withBase(
-        s""", e AS (
-          |  SELECT ns.node_id AS src_id, nd.node_id AS dst_id
-          |  FROM triples t
-          |  JOIN nodes ns ON t.subj = ns.canonical_name
-          |  JOIN nodes nd ON t.obj = nd.canonical_name
-          |),
-          |vn AS (SELECT DISTINCT node_id FROM (
-          |  SELECT src_id AS node_id FROM e UNION ALL SELECT dst_id FROM e)),
-          |dg AS (SELECT src_id, count(*) AS deg FROM e GROUP BY src_id),
-          |pr0 AS (SELECT node_id, CAST(1000000 AS BIGINT) AS pr FROM vn),
-          |${(1 to 5).map(prIter).mkString(",\n")}
-          |SELECT n.node_id, n.canonical_name, p.pr
-          |FROM pr5 p JOIN nodes n USING(node_id)""".stripMargin)
+        """SELECT 'c'||o_orderkey AS conv_id, CAST(0 AS BIGINT) AS turn_idx,
+          |       CAST(1 AS BIGINT) AS mention_idx, 'entity_def' AS kind,
+          |       'customer:'||replace(c_name,' ','_') AS subj, '' AS pred, '' AS obj, '' AS attr, '' AS parent, CAST(0 AS BIGINT) AS hop
+          |FROM orders JOIN customer ON o_custkey = c_custkey
+          |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(0 AS BIGINT), 'entity_def', pname, '', '', qty, cat, CAST(0 AS BIGINT) FROM li
+          |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(1 AS BIGINT), 'entity_def', sname, '', '', '', '', CAST(0 AS BIGINT) FROM li
+          |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(2 AS BIGINT), 'alias_binding', 'a'||k, '', pname, '', '', CAST(0 AS BIGINT) FROM li
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(0 AS BIGINT), 'relation', sname, 'supplies', 'a'||k, '', '', CAST(0 AS BIGINT) FROM li
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(1 AS BIGINT), 'relation', 'self', 'ordered', 'a'||k, '', '', CAST(0 AS BIGINT) FROM li
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 AS BIGINT), 'relation', 'a'||k, 'returned_to', sname, '', '', CAST(0 AS BIGINT) FROM li WHERE k % 3 = 0
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END AS BIGINT), 'relation', 'self', 'mentions', 'item:unknown_'||pk, '', '', CAST(0 AS BIGINT) FROM li WHERE k % 4 = 0
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + (CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT), 'relation', 'self', 'reordered', 'a'||k, '', '', CAST(0 AS BIGINT) FROM li WHERE k % 6 = 0
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + (CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 4 = 0 THEN 1 ELSE 0 END) AS BIGINT), 'relation', 'a'||k, 'sourced_from', sname, '', '', CAST(1 AS BIGINT) FROM li WHERE k % 6 = 0
+          |""".stripMargin)),
+
+    Query("kg_bindings", (s, dir) =>
+      Resolve.bindings(Pipeline.mentions(s, dir)).select(
+        col("conv_id"), long("turn_idx"), long("mention_idx"),
+        col("ref"), col("target")),
+      withBase(
+        """SELECT conv_id, CAST(2*k-1 AS BIGINT) AS turn_idx,
+          |       CAST(2 AS BIGINT) AS mention_idx, 'a'||k AS ref, pname AS target
+          |FROM li""".stripMargin)),
+
+    Query("kg_resolved", (s, dir) =>
+      Pipeline.resolved(s, dir).select(
+        col("conv_id"), long("turn_idx"), long("mention_idx"),
+        col("subj"), col("pred"), col("obj")),
+      withBase(
+        """SELECT conv_id, turn_idx, mention_idx, subj, pred, obj FROM triples
+          |UNION ALL
+          |SELECT conv_id, CAST(2*k AS BIGINT), CAST(2 + CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END AS BIGINT),
+          |       cust, 'mentions', 'item:unknown_'||pk
+          |FROM lic WHERE k % 4 = 0""".stripMargin)),
+
+    Query("kg_triples", (s, dir) =>
+      Pipeline.triples(s, dir).select(
+        col("conv_id"), long("turn_idx"), long("mention_idx"),
+        col("subj"), col("pred"), col("obj")),
+      withBase(
+        "SELECT conv_id, turn_idx, mention_idx, subj, pred, obj FROM triples")),
+
+    /** Per-conversation KG telemetry off the committed triples table: the
+      * graph-side analog of the corpus curation stats (which conversations
+      * are triple-dense / entity-diverse — the per-document fact table a
+      * KG-quality dashboard reads). The three distinct counts are
+      * `size(collect_set(...))` — exactly count_distinct, but in ONE
+      * map-side-combinable aggregation over the raw rows instead of the
+      * multi-distinct Expand plan that shuffled every triple 4x (guide
+      * §2.3 shuffle fewer bytes; set state is bounded by the
+      * per-conversation fan-in, which is turns-per-conv — skew-free at any
+      * corpus size). */
+    Query("kg_conv_stats", (s, dir) =>
+      Pipeline.triples(s, dir)
+        .groupBy(col("conv_id"))
+        .agg(count(lit(1)).as("n_triples"),
+          size(collect_set(col("pred"))).cast("long").as("n_preds"),
+          size(collect_set(col("subj"))).cast("long").as("n_subjects"),
+          size(collect_set(col("obj"))).cast("long").as("n_objects"),
+          max(col("turn_idx")).cast("long").as("max_turn")),
+      withBase(
+        """SELECT conv_id,
+          |       CAST(count(*) AS BIGINT) AS n_triples,
+          |       CAST(count(DISTINCT pred) AS BIGINT) AS n_preds,
+          |       CAST(count(DISTINCT subj) AS BIGINT) AS n_subjects,
+          |       CAST(count(DISTINCT obj) AS BIGINT) AS n_objects,
+          |       CAST(max(turn_idx) AS BIGINT) AS max_turn
+          |FROM triples GROUP BY conv_id""".stripMargin)),
+
+    Query("kg_nodes", (s, dir) =>
+      Pipeline.nodes(s, dir),
+      withBase(
+        "SELECT node_type, node_id, canonical_name FROM nodes")),
+
+    Query("kg_nodes_minted", (s, dir) =>
+      Pipeline.mintedNodes(s, dir),
+      withBase(
+        """SELECT 'item' AS node_type,
+          |       CAST((SELECT count(*) FROM names) + row_number() OVER (ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS node_id,
+          |       canonical_name
+          |FROM (SELECT DISTINCT 'item:unknown_'||pk AS canonical_name FROM li WHERE k % 4 = 0)""".stripMargin)),
+
+    Query("kg_edges", qEdges,
+      withBase(
+        """SELECT t.pred AS edge_type,
+          |       ns.node_type AS src_type, ns.node_id AS src_id,
+          |       nd.node_type AS dst_type, nd.node_id AS dst_id,
+          |       t.conv_id, t.turn_idx, t.mention_idx
+          |FROM triples t
+          |JOIN nodes ns ON t.subj = ns.canonical_name
+          |JOIN nodes nd ON t.obj = nd.canonical_name""".stripMargin)),
+
+    Query("kg_alias_groups", (s, dir) =>
+      Canonical.aliasGroups(Pipeline.mentions(s, dir)),
+      withBase(
+        """SELECT canonical_name,
+          |       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
+          |       min(conv_id) AS first_conv, max(conv_id) AS last_conv
+          |FROM (
+          |  SELECT cust AS canonical_name, conv_id FROM oc
+          |  UNION ALL SELECT pname, conv_id FROM li
+          |  UNION ALL SELECT sname, conv_id FROM li
+          |)
+          |GROUP BY canonical_name""".stripMargin)),
+
+    /** Node property richness (reference nodes carry code/docstring/location
+      * properties, call_graph.py:492-540): nodes with a struct-typed props
+      * column aggregated from their definition mentions. Container-only
+      * nodes (never defined) get default props via the left join.
+      * The struct stays an engine-internal cell; the comparison boundary is
+      * scalar (the driver's comparator sorts raw cells, which a struct/array
+      * cell can never satisfy — CORRECTNESS_r02 err rows). */
+    Query("kg_nodes_rich", (s, dir) => {
+      val stats = Pipeline.mentions(s, dir).filter(col("kind") === "entity_def")
+        .groupBy(col("subj").as("canonical_name"))
+        .agg(count(lit(1)).cast("long").as("n_defs"),
+          min(col("conv_id")).as("first_conv"),
+          max(col("attr")).as("max_attr"))
+      Pipeline.nodes(s, dir)
+        .join(stats, Seq("canonical_name"), "left")
+        .select(col("node_id"), col("canonical_name"), col("node_type"),
+          struct(
+            coalesce(col("n_defs"), lit(0L)).as("n_defs"),
+            coalesce(col("first_conv"), lit("")).as("first_conv"),
+            coalesce(col("max_attr"), lit("")).as("max_attr")).as("props"))
+        .select(col("node_id"), col("canonical_name"), col("node_type"),
+          col("props.n_defs").as("n_defs"),
+          col("props.first_conv").as("first_conv"),
+          col("props.max_attr").as("max_attr"))
     },
+      withBase(
+        """, defs AS (
+          |  SELECT cust AS canonical_name, conv_id, '' AS attr FROM oc
+          |  UNION ALL SELECT pname, conv_id, qty FROM li
+          |  UNION ALL SELECT sname, conv_id, '' FROM li
+          |),
+          |stats AS (
+          |  SELECT canonical_name, CAST(count(*) AS BIGINT) AS n_defs,
+          |         min(conv_id) AS first_conv, max(attr) AS max_attr
+          |  FROM defs GROUP BY canonical_name
+          |)
+          |SELECT n.node_id, n.canonical_name, n.node_type,
+          |       coalesce(s.n_defs, 0) AS n_defs,
+          |       coalesce(s.first_conv, '') AS first_conv,
+          |       coalesce(s.max_attr, '') AS max_attr
+          |FROM nodes n LEFT JOIN stats s ON n.canonical_name = s.canonical_name""".stripMargin)),
 
-    "kg_degrees" -> withBase(
-      """SELECT n.node_id, n.canonical_name,
-        |       CAST(coalesce(o.c, 0) AS BIGINT) AS out_deg,
-        |       CAST(coalesce(i.c, 0) AS BIGINT) AS in_deg
-        |FROM nodes n
-        |LEFT JOIN (SELECT subj, count(*) AS c FROM triples GROUP BY subj) o ON o.subj = n.canonical_name
-        |LEFT JOIN (SELECT obj, count(*) AS c FROM triples GROUP BY obj) i ON i.obj = n.canonical_name""".stripMargin),
+    /** Turn classifier (S2: the config-file classifier analog) — a pure
+      * when-chain over tool/text content, no UDF. */
+    Query("kg_turn_roles", (s, dir) =>
+      Pipeline.transcripts(s, dir).select(
+        col("conv_id"), long("turn_idx"),
+        when(col("tool") =!= "", "tool_call")
+          .when(col("text").startsWith("define entity"), "definition")
+          .when(col("text").startsWith("link ") || col("text").startsWith("chain "), "relation")
+          .otherwise("narration").as("turn_class")),
+      withBase(
+        """SELECT conv_id, CAST(0 AS BIGINT) AS turn_idx, 'narration' AS turn_class FROM oc
+          |UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), 'definition' FROM li
+          |UNION ALL SELECT conv_id, CAST(2*k AS BIGINT), 'tool_call' FROM li""".stripMargin)),
 
-    "kg_fuzzy_link" ->
-      """WITH pn AS (SELECT DISTINCT replace(p_name,' ','_') AS name FROM part),
-        |sur AS (
-        |  SELECT DISTINCT CASE WHEN p_partkey % 3 = 0 THEN replace(p_name,' ','_')
-        |         ELSE substr(replace(p_name,' ','_'), 1, length(replace(p_name,' ','_'))-1) END AS surface
-        |  FROM part
+    /** Identifier-split vocabulary (X5): canonical names broken into
+      * lowercase words (dots/snake/camel/ACRONYM), top-5 per node type —
+      * through the size-gated TopK helper, so a corpus-scale word
+      * vocabulary never sorts one node_type's full word set on a single
+      * window task (VERDICT r05 #7). */
+    Query("kg_name_words", (s, dir) =>
+      graft.canonical.TopK.perGroup(
+        Pipeline.nodes(s, dir)
+          .select(col("node_type"),
+            explode(graft.ops.TextOps.identifierWords(col("canonical_name"))).as("word"))
+          .groupBy("node_type", "word").agg(count(lit(1)).as("n")),
+        Seq("node_type"), Seq(col("n").desc, col("word")), 5, "rk"),
+      withBase(
+        """, words AS (
+          |  SELECT node_type,
+          |         unnest(list_filter(string_split(lower(
+          |           regexp_replace(regexp_replace(regexp_replace(canonical_name,
+          |             '([A-Z]+)([A-Z][a-z])', '\1 \2', 'g'),
+          |             '([a-z0-9])([A-Z])', '\1 \2', 'g'),
+          |             '[^A-Za-z0-9]+', ' ', 'g')), ' '), w -> w <> '')) AS word
+          |  FROM nodes
+          |),
+          |counted AS (
+          |  SELECT node_type, word, CAST(count(*) AS BIGINT) AS n
+          |  FROM words GROUP BY node_type, word
+          |)
+          |SELECT node_type, word, n, rk FROM (
+          |  SELECT *, CAST(row_number() OVER (PARTITION BY node_type ORDER BY n DESC, word) AS BIGINT) AS rk
+          |  FROM counted
+          |) WHERE rk <= 5""".stripMargin)),
+
+    Query("kg_hierarchy_nodes", (s, dir) =>
+      Pipeline.hierNodes(s, dir),
+        s"""WITH $hierNodesCte
+          |SELECT hier_id, name, is_folder FROM hid""".stripMargin),
+
+    Query("kg_hierarchy_edges", (s, dir) =>
+      graft.graph.Hierarchy.edges(Pipeline.transcripts(s, dir),
+        Pipeline.hierNodes(s, dir)),
+        s"""WITH $hierNodesCte,
+          |he AS (
+          |  SELECT DISTINCT 'corpus:all' AS src, 'month:'||strftime(o_orderdate,'%Y-%m') AS dst FROM orders
+          |  UNION ALL SELECT 'month:'||strftime(o_orderdate,'%Y-%m'), 'conv:c'||o_orderkey FROM orders
+          |)
+          |SELECT s.hier_id AS src_id, d.hier_id AS dst_id, he.src, he.dst
+          |FROM he
+          |JOIN hid s ON he.src = s.name
+          |JOIN hid d ON he.dst = d.name""".stripMargin),
+
+    Query("kg_segment_nodes", (s, dir) =>
+      Extract.segmentNodes(Pipeline.transcripts(s, dir)).select(
+        col("conv_id"), long("turn_idx"), long("seg_idx"), col("kind")),
+      withBase(s", $segsCte\nSELECT conv_id, turn_idx, seg_idx, kind FROM segs")),
+
+    Query("kg_segment_edges", (s, dir) =>
+      // single derivation: segmentEdges now fetches the destination label
+      // via lead(kind) on the same window, so there is no second consumer
+      // of the posexplode (and nothing to checkpoint)
+      Extract.segmentEdges(Extract.segmentNodes(Pipeline.transcripts(s, dir)))
+        .select(col("conv_id"), long("turn_idx"), long("src_seg"),
+          long("dst_seg"), col("src_kind"), col("dst_kind")),
+      withBase(
+        s""", $segsCte
+          |SELECT conv_id, turn_idx, seg_idx AS src_seg, next_seg AS dst_seg,
+          |       kind AS src_kind, next_kind AS dst_kind
+          |FROM (
+          |  SELECT *, lead(seg_idx) OVER w AS next_seg, lead(kind) OVER w AS next_kind
+          |  FROM segs WINDOW w AS (PARTITION BY conv_id, turn_idx ORDER BY seg_idx)
+          |)
+          |WHERE next_seg IS NOT NULL""".stripMargin)),
+
+    /** Segment↔entity bridge (reference subgraph_function_edges /
+      * function_subgraph_edges, hierarchical_graph.py:182-183): each
+      * entity-definition segment joined to the mention at the same
+      * (conv_id, turn_idx, seg_idx == mention_idx) — the extraction
+      * guarantees positional alignment between a turn's segment list and
+      * its mention list — then remapped to the dense node ID, emitted in
+      * BOTH directions so a consumer can navigate entity→segment as well
+      * as segment→entity (closes the last disjoint ID space, VERDICT r03
+      * missing #2). The node remap is size-gated + salted (a hot entity is
+      * defined in many segments). */
+    Query("kg_segment_entity_edges", (s, dir) => {
+      val segs = Extract.segmentNodes(Pipeline.transcripts(s, dir))
+        .filter(col("kind") === "entity_def")
+        .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
+          col("seg_idx").cast("long").as("seg_idx"))
+      val defs = Pipeline.mentions(s, dir).filter(col("kind") === "entity_def")
+        .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
+          col("mention_idx").cast("long").as("seg_idx"),
+          col("subj").as("canonical_name"))
+      val linked = segs.join(defs, Seq("conv_id", "turn_idx", "seg_idx"))
+      val n = Pipeline.nodes(s, dir)
+        .select(col("canonical_name"), col("node_id"))
+      val withId = Joins
+        .innerSkewSafe(linked, n, "canonical_name", saltFrom = Seq("conv_id"))
+      // one pass: a self-union would re-execute the whole join pipeline
+      // per direction — the direction label is a 2-element explode instead
+      withId.select(
+        explode(array(lit("segment_defines"), lit("defined_in_segment")))
+          .as("edge_type"),
+        col("conv_id"), col("turn_idx"), col("seg_idx"),
+        col("node_id"), col("canonical_name"))
+    },
+      withBase(
+        """, sed AS (
+          |  SELECT conv_id, CAST(0 AS BIGINT) AS turn_idx, CAST(1 AS BIGINT) AS seg_idx, cust AS canonical_name FROM oc
+          |  UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(0 AS BIGINT), pname FROM li
+          |  UNION ALL SELECT conv_id, CAST(2*k-1 AS BIGINT), CAST(1 AS BIGINT), sname FROM li
+          |),
+          |sej AS (
+          |  SELECT sed.conv_id, sed.turn_idx, sed.seg_idx, n.node_id, sed.canonical_name
+          |  FROM sed JOIN nodes n ON sed.canonical_name = n.canonical_name
+          |)
+          |SELECT 'segment_defines' AS edge_type, conv_id, turn_idx, seg_idx, node_id, canonical_name FROM sej
+          |UNION ALL
+          |SELECT 'defined_in_segment', conv_id, turn_idx, seg_idx, node_id, canonical_name FROM sej""".stripMargin)),
+
+    Query("kg_turn_edges", (s, dir) =>
+      Extract.turnOrderEdges(Pipeline.transcripts(s, dir)).select(
+        col("conv_id"), long("turn_idx"), long("next_turn_idx")),
+      withBase(
+        """SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx,
+          |       CAST(next_turn_idx AS BIGINT) AS next_turn_idx
+          |FROM (
+          |  SELECT conv_id, turn_idx,
+          |         lead(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS next_turn_idx
+          |  FROM (
+          |    SELECT conv_id, 0 AS turn_idx FROM oc
+          |    UNION ALL SELECT conv_id, 2*k-1 FROM li
+          |    UNION ALL SELECT conv_id, 2*k FROM li
+          |  )
+          |)
+          |WHERE next_turn_idx IS NOT NULL""".stripMargin)),
+
+    Query("kg_version_nodes", (s, dir) =>
+      Pipeline.versionNodes(s, dir).select(
+        col("entity"), col("version_seq"), col("ts_s"), col("body_hash"),
+        col("state"), col("conv_id"), long("turn_idx")),
+      withBase(
+        """SELECT entity, version_seq, ts_s, body_hash, state, conv_id, turn_idx FROM (
+          |  SELECT entity,
+          |         CAST(row_number() OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS BIGINT) AS version_seq,
+          |         strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
+          |         sha256(state) AS body_hash, state, conv_id, CAST(turn_idx AS BIGINT) AS turn_idx
+          |  FROM (
+          |    SELECT *, lag(state) OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS prev
+          |    FROM (SELECT pname AS entity, qty AS state, l_shipdate AS ts, conv_id, 2*k-1 AS turn_idx FROM li)
+          |  ) WHERE prev IS NULL OR prev <> state
+          |)""".stripMargin)),
+
+    Query("kg_version_edges", (s, dir) =>
+      Pipeline.versionEdges(s, dir).select(
+        col("entity"), col("src_seq"), col("dst_seq"),
+        col("conv_id"), long("turn_idx"), col("body_hash")),
+      withBase(
+        """SELECT entity, version_seq - 1 AS src_seq, version_seq AS dst_seq,
+          |       conv_id, turn_idx, body_hash FROM (
+          |  SELECT entity,
+          |         CAST(row_number() OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS BIGINT) AS version_seq,
+          |         sha256(state) AS body_hash, conv_id, CAST(turn_idx AS BIGINT) AS turn_idx
+          |  FROM (
+          |    SELECT *, lag(state) OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS prev
+          |    FROM (SELECT pname AS entity, qty AS state, l_shipdate AS ts, conv_id, 2*k-1 AS turn_idx FROM li)
+          |  ) WHERE prev IS NULL OR prev <> state
+          |) WHERE version_seq > 1""".stripMargin)),
+
+    Query("kg_version_latest", (s, dir) =>
+      Versions.latestVersions(Pipeline.versionNodes(s, dir)),
+      withBase(
+        """SELECT entity, max(version_seq) AS version_seq,
+          |       max_by(state, version_seq) AS state,
+          |       max_by(body_hash, version_seq) AS body_hash FROM (
+          |  SELECT entity,
+          |         CAST(row_number() OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS BIGINT) AS version_seq,
+          |         sha256(state) AS body_hash, state
+          |  FROM (
+          |    SELECT *, lag(state) OVER (PARTITION BY entity ORDER BY ts, conv_id, turn_idx) AS prev
+          |    FROM (SELECT pname AS entity, qty AS state, l_shipdate AS ts, conv_id, 2*k-1 AS turn_idx FROM li)
+          |  ) WHERE prev IS NULL OR prev <> state
+          |)
+          |GROUP BY entity""".stripMargin)),
+
+    /** Cross-conversation entity resolution: customers co-referenced through
+      * shared unknown items (the minted entities) form one canonical group —
+      * connected components over the co-reference graph (north rule's
+      * "connected-components entity resolution"). The pk-filter keeps the
+      * graph sparse enough that component structure is non-trivial. */
+    Query("kg_components", (s, dir) => {
+      val itemPk = regexp_extract(col("obj"), "^item:unknown_([0-9]+)$", 1)
+      val corefs = Pipeline.resolved(s, dir)
+        .filter(col("pred") === "mentions" &&
+          itemPk =!= "" && itemPk.cast("long") % 20 === 0)
+        .select(col("subj"), col("obj"))
+        .distinct()
+      val allNodes = Pipeline.nodes(s, dir).unionByName(Pipeline.mintedNodes(s, dir))
+        .select(col("canonical_name"), col("node_id"))
+      // node table scales with the corpus: size-gated remap (broadcast while
+      // small, salted shuffle join above the gate — Joins.remapBoth)
+      val edges = Joins.remapBoth(
+        corefs, allNodes, "canonical_name", "node_id",
+        "subj", "obj", "src", "dst")
+        .select(col("src"), col("dst"))
+      val verts = edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct()
+      ConnectedComponents.runWithNodes(verts, edges)
+        .join(Joins.dim(allNodes), col("id") === col("node_id"))
+        .select(col("node_id"), col("canonical_name"), col("component"))
+    },
+      s"""WITH RECURSIVE $baseCtes,
+        |minted AS (
+        |  SELECT CAST((SELECT count(*) FROM names) + row_number() OVER (ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS node_id,
+        |         canonical_name
+        |  FROM (SELECT DISTINCT 'item:unknown_'||pk AS canonical_name FROM li WHERE k % 4 = 0)
         |),
-        |exact AS (
-        |  SELECT surface, surface AS matched, CAST(1000000 AS BIGINT) AS score_ppm, 'exact' AS method
-        |  FROM sur WHERE surface IN (SELECT name FROM pn)
+        |allnodes AS (
+        |  SELECT node_id, canonical_name FROM nodes
+        |  UNION ALL SELECT node_id, canonical_name FROM minted
         |),
-        |miss AS (SELECT surface FROM sur WHERE surface NOT IN (SELECT name FROM pn)),
-        |stg AS (
-        |  SELECT DISTINCT surface,
-        |         substr('^'||surface||'$', CAST(unnest(range(1, length('^'||surface||'$')-1)) AS INT), 3) AS tg
-        |  FROM miss
+        |ce AS (
+        |  SELECT DISTINCT cust, 'item:unknown_'||pk AS item
+        |  FROM lic WHERE k % 4 = 0 AND pk % 20 = 0
         |),
-        |dtg AS (
-        |  SELECT DISTINCT name,
-        |         substr('^'||name||'$', CAST(unnest(range(1, length('^'||name||'$')-1)) AS INT), 3) AS tg
-        |  FROM pn
+        |eid AS (
+        |  SELECT a.node_id AS src, b.node_id AS dst
+        |  FROM ce
+        |  JOIN allnodes a ON ce.cust = a.canonical_name
+        |  JOIN allnodes b ON ce.item = b.canonical_name
         |),
-        |smh AS (SELECT surface, min(md5('0|'||tg)) AS m0,
-        |               min(md5('1|'||tg)) AS m1,
-        |               min(md5('2|'||tg)) AS m2,
-        |               min(md5('3|'||tg)) AS m3,
-        |               min(md5('4|'||tg)) AS m4,
-        |               min(md5('5|'||tg)) AS m5,
-        |               min(md5('6|'||tg)) AS m6,
-        |               min(md5('7|'||tg)) AS m7
-        |        FROM stg GROUP BY surface),
-        |dmh AS (SELECT name, min(md5('0|'||tg)) AS m0,
-        |               min(md5('1|'||tg)) AS m1,
-        |               min(md5('2|'||tg)) AS m2,
-        |               min(md5('3|'||tg)) AS m3,
-        |               min(md5('4|'||tg)) AS m4,
-        |               min(md5('5|'||tg)) AS m5,
-        |               min(md5('6|'||tg)) AS m6,
-        |               min(md5('7|'||tg)) AS m7
-        |        FROM dtg GROUP BY name),
-        |sbk AS (SELECT surface, CAST(0 AS BIGINT) AS band, md5(m0||m1) AS bucket FROM smh
-        |        UNION ALL SELECT surface, CAST(1 AS BIGINT), md5(m2||m3) FROM smh
-        |        UNION ALL SELECT surface, CAST(2 AS BIGINT), md5(m4||m5) FROM smh
-        |        UNION ALL SELECT surface, CAST(3 AS BIGINT), md5(m6||m7) FROM smh),
-        |dbk AS (SELECT name, CAST(0 AS BIGINT) AS band, md5(m0||m1) AS bucket FROM dmh
-        |        UNION ALL SELECT name, CAST(1 AS BIGINT), md5(m2||m3) FROM dmh
-        |        UNION ALL SELECT name, CAST(2 AS BIGINT), md5(m4||m5) FROM dmh
-        |        UNION ALL SELECT name, CAST(3 AS BIGINT), md5(m6||m7) FROM dmh),
-        |cand AS (SELECT DISTINCT s.surface, d.name AS cand
-        |         FROM sbk s JOIN dbk d ON s.band = d.band AND s.bucket = d.bucket),
-        |ssz AS (SELECT surface, count(*) AS sz FROM stg GROUP BY surface),
-        |dsz AS (SELECT name, count(*) AS sz FROM dtg GROUP BY name),
-        |inter AS (
-        |  SELECT c.surface, c.cand, count(*) AS inter
-        |  FROM cand c
-        |  JOIN stg ON stg.surface = c.surface
-        |  JOIN dtg ON dtg.name = c.cand AND dtg.tg = stg.tg
-        |  GROUP BY c.surface, c.cand
-        |),
-        |scored AS (
-        |  SELECT i.surface, i.cand,
-        |         CAST(round(CAST(i.inter AS DOUBLE) / CAST(ssz.sz + dsz.sz - i.inter AS DOUBLE) * 1000000) AS BIGINT) AS score_ppm
-        |  FROM inter i
-        |  JOIN ssz ON ssz.surface = i.surface
-        |  JOIN dsz ON dsz.name = i.cand
-        |),
-        |best AS (
-        |  SELECT surface, cand AS matched, score_ppm, 'fuzzy' AS method FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY surface ORDER BY score_ppm DESC, cand) AS rk
-        |    FROM scored WHERE score_ppm >= 300000
-        |  ) WHERE rk = 1
+        |und AS (SELECT DISTINCT s, d FROM (
+        |  SELECT src AS s, dst AS d FROM eid UNION ALL SELECT dst, src FROM eid
+        |)),
+        |verts AS (SELECT DISTINCT s AS id FROM und),
+        |reach AS (
+        |  SELECT id, id AS comp FROM verts
+        |  UNION
+        |  SELECT u.d AS id, r.comp FROM reach r JOIN und u ON u.s = r.id WHERE r.comp < u.d
         |)
-        |SELECT * FROM exact UNION ALL SELECT * FROM best""".stripMargin,
+        |SELECT v.id AS node_id, n.canonical_name, x.component
+        |FROM verts v
+        |JOIN (SELECT id, min(comp) AS component FROM reach GROUP BY id) x ON v.id = x.id
+        |JOIN allnodes n ON v.id = n.node_id""".stripMargin),
 
-    "kg_conv_entity_edges" ->
-      s"""WITH $baseCtes, $hierNodesCte,
-        |defs AS (
-        |  SELECT DISTINCT conv_id, canonical_name FROM (
-        |    SELECT conv_id, cust AS canonical_name FROM oc
-        |    UNION ALL SELECT conv_id, pname FROM li
-        |    UNION ALL SELECT conv_id, sname FROM li
-        |  )
-        |)
-        |SELECT 'contains_entity' AS edge_type, h.hier_id, n.node_id,
-        |       d.conv_id, d.canonical_name
-        |FROM defs d
-        |JOIN nodes n ON d.canonical_name = n.canonical_name
-        |JOIN hid h ON h.name = 'conv:'||d.conv_id""".stripMargin,
+    /** Degree distribution over the emitted graph (per-node in/out degree —
+      * the first analytic a KG consumer runs; also exercises the unified
+      * edges table as a source). */
+    Query("kg_degrees", (s, dir) => {
+      val e = Pipeline.edges(s, dir)
+      val n = Pipeline.nodes(s, dir)
+      val outD = e.groupBy(col("src_id").as("node_id"))
+        .agg(count(lit(1)).as("out_deg"))
+      val inD = e.groupBy(col("dst_id").as("node_id"))
+        .agg(count(lit(1)).as("in_deg"))
+      n.join(outD, Seq("node_id"), "left")
+        .join(inD, Seq("node_id"), "left")
+        .select(col("node_id"), col("canonical_name"),
+          coalesce(col("out_deg"), lit(0L)).as("out_deg"),
+          coalesce(col("in_deg"), lit(0L)).as("in_deg"))
+    },
+      withBase(
+        """SELECT n.node_id, n.canonical_name,
+          |       CAST(coalesce(o.c, 0) AS BIGINT) AS out_deg,
+          |       CAST(coalesce(i.c, 0) AS BIGINT) AS in_deg
+          |FROM nodes n
+          |LEFT JOIN (SELECT subj, count(*) AS c FROM triples GROUP BY subj) o ON o.subj = n.canonical_name
+          |LEFT JOIN (SELECT obj, count(*) AS c FROM triples GROUP BY obj) i ON i.obj = n.canonical_name""".stripMargin)),
 
-    "kg_cluster_nodes" ->
-      s"""WITH $baseCtes, ${OpsEntry.clusterCtes}
-        |SELECT 'cluster:'||cluster AS cluster_name,
-        |       CAST(cluster AS BIGINT) AS cluster_id,
-        |       CAST(count(*) AS BIGINT) AS n_members,
-        |       min(n.canonical_name) AS cluster_summary
-        |FROM a1 JOIN nodes n ON a1.vec_id = n.node_id
-        |GROUP BY cluster""".stripMargin,
+    /** Fixed-point integer PageRank over the emitted edge table (graph
+      * analytics beyond degrees — the networkx-style consumption the
+      * reference's Neo4j export exists for, run IN the engine): 5
+      * iterations, multi-edges count, deterministic at any partitioning
+      * (graph/Analytics.pageRank — long sums + floor division only). */
+    Query("kg_pagerank", (s, dir) => {
+      val pr = graft.graph.Analytics.pageRank(Pipeline.edges(s, dir))
+      val n = Pipeline.nodes(s, dir)
+        .select(col("node_id"), col("canonical_name"))
+      // both sides node-cardinality and distinct per key: plain equi join
+      pr.join(n, Seq("node_id"))
+        .select(col("node_id"), col("canonical_name"), col("pr"))
+    },
+      {
+        def prIter(i: Int): String =
+          s"""pr$i AS (SELECT vn.node_id, CAST(150000 + (85 * coalesce(s.inflow, 0)) // 100 AS BIGINT) AS pr
+            |        FROM vn LEFT JOIN (
+            |          SELECT e.dst_id AS node_id, sum(p.pr // dg.deg) AS inflow
+            |          FROM e JOIN pr${i - 1} p ON e.src_id = p.node_id
+            |          JOIN dg ON e.src_id = dg.src_id
+            |          GROUP BY e.dst_id) s USING(node_id))""".stripMargin
+        withBase(
+          s""", e AS (
+            |  SELECT ns.node_id AS src_id, nd.node_id AS dst_id
+            |  FROM triples t
+            |  JOIN nodes ns ON t.subj = ns.canonical_name
+            |  JOIN nodes nd ON t.obj = nd.canonical_name
+            |),
+            |vn AS (SELECT DISTINCT node_id FROM (
+            |  SELECT src_id AS node_id FROM e UNION ALL SELECT dst_id FROM e)),
+            |dg AS (SELECT src_id, count(*) AS deg FROM e GROUP BY src_id),
+            |pr0 AS (SELECT node_id, CAST(1000000 AS BIGINT) AS pr FROM vn),
+            |${(1 to 5).map(prIter).mkString(",\n")}
+            |SELECT n.node_id, n.canonical_name, p.pr
+            |FROM pr5 p JOIN nodes n USING(node_id)""".stripMargin)
+      }),
 
-    "kg_cluster_edges" ->
-      s"""WITH $baseCtes, ${OpsEntry.clusterCtes}
-        |SELECT 'in_cluster' AS edge_type,
-        |       'cluster:'||cluster AS cluster_name,
-        |       CAST(cluster AS BIGINT) AS cluster_id,
-        |       n.node_id, n.canonical_name
-        |FROM a1 JOIN nodes n ON a1.vec_id = n.node_id""".stripMargin,
+    /** Static question rows × node-type cross product (the reference's
+      * question_nodes × cluster pattern, knowledge_graph.py:1513-1532 /
+      * SURVEY J12): a small driver-side table crossed against a distinct
+      * projection of the graph. */
+    Query("kg_questions", (s, dir) => {
+      import s.implicits._
+      val questions = Seq((0L, "what"), (1L, "how"), (2L, "when"), (3L, "where"))
+        .toDF("q_id", "q_kind")
+      val types = Pipeline.nodes(s, dir).select("node_type").distinct()
+      questions.crossJoin(types)
+    },
+      withBase(
+        """SELECT q_id, q_kind, node_type FROM (
+          |  SELECT CAST(0 AS BIGINT) AS q_id, 'what' AS q_kind
+          |  UNION ALL SELECT 1, 'how' UNION ALL SELECT 2, 'when' UNION ALL SELECT 3, 'where'
+          |), (SELECT DISTINCT node_type FROM nodes)""".stripMargin)),
 
-    "kg_pr_edges" -> withBase(
-      """SELECT CAST(s_suppkey AS BIGINT) AS pr_id, n.node_id, n.canonical_name,
-        |       CASE WHEN s_suppkey % 5 = 0 THEN NULL
-        |            ELSE CAST(s_suppkey * 37 % 1000 AS BIGINT) END AS merged_by
-        |FROM supplier
-        |JOIN nodes n ON 'supplier:'||s_name = n.canonical_name""".stripMargin),
+    /** Question→cluster edges (reference question_cluster_edges — the full
+      * question × cluster cross product, knowledge_graph.py:1522-1530,
+      * J12): every static question node links to every semantic cluster.
+      * Both sides are bounded vocabularies, so the cross join broadcasts. */
+    Query("kg_question_cluster_edges", (s, dir) => {
+      import s.implicits._
+      val questions = Seq((0L, "what"), (1L, "how"), (2L, "when"), (3L, "where"))
+        .toDF("q_id", "q_kind")
+      val clusters = nodeClusters(s, dir)
+        .select(col("cluster").cast("long").as("cluster_id")).distinct()
+      questions.crossJoin(clusters)
+    },
+        s"""WITH $baseCtes, ${OpsEntry.clusterCtes}
+          |SELECT q_id, q_kind, cluster_id FROM (
+          |  SELECT CAST(0 AS BIGINT) AS q_id, 'what' AS q_kind
+          |  UNION ALL SELECT 1, 'how' UNION ALL SELECT 2, 'when' UNION ALL SELECT 3, 'where'
+          |), (SELECT DISTINCT CAST(a1.cluster AS BIGINT) AS cluster_id
+          |    FROM a1 JOIN nodes n ON a1.vec_id = n.node_id)""".stripMargin),
 
-    "kg_pr_nodes_rich" ->
-      """WITH cm AS (
-        |  SELECT CAST(l_suppkey AS BIGINT) AS pr_id,
-        |         CAST(l_orderkey * 8 + l_linenumber AS BIGINT) AS cid,
-        |         CAST(l_orderkey AS BIGINT) AS ok
-        |  FROM lineitem
-        |),
-        |cm2 AS (
-        |  SELECT pr_id, cid,
-        |         'dev_'||CAST(cid % 25 AS VARCHAR) AS cuser,
-        |         strftime(DATE '1995-01-01' + CAST(cid % 1000 AS INTEGER), '%Y-%m-%d') AS created_at,
-        |         'comment on order '||CAST(ok AS VARCHAR) AS body
-        |  FROM cm
-        |),
-        |rk AS (
-        |  SELECT *, row_number() OVER (PARTITION BY pr_id ORDER BY cid, body) AS r
-        |  FROM cm2
-        |),
-        |cj AS (
-        |  SELECT pr_id,
-        |         '['||string_agg('{"cid":'||cid||',"cuser":"'||cuser||'","created_at":"'||created_at||'","body":"'||body||'"}', ',' ORDER BY cid, body)||']' AS cjson,
-        |         CAST(count(*) AS BIGINT) AS n_kept
-        |  FROM rk WHERE r <= 3 GROUP BY pr_id
-        |),
-        |tot AS (SELECT pr_id, CAST(count(*) AS BIGINT) AS n_total FROM cm2 GROUP BY pr_id)
-        |SELECT CAST(s.s_suppkey AS BIGINT) AS pr_id,
-        |       'PR #'||CAST(s.s_suppkey AS VARCHAR) AS pr_title,
-        |       'Proposed by '||s.s_name AS pr_body,
-        |       CAST(CASE WHEN s.s_suppkey % 4 = 0 THEN 1 ELSE 0 END AS BIGINT) AS pr_open,
-        |       CASE WHEN s.s_suppkey % 5 = 0 THEN NULL
-        |            ELSE CAST(s.s_suppkey * 37 % 1000 AS BIGINT) END AS merged_by,
-        |       coalesce(tot.n_total, 0) AS n_comments_total,
-        |       coalesce(cj.n_kept, 0) AS n_comments_kept,
-        |       CASE WHEN cj.cjson IS NULL THEN '' ELSE md5(cj.cjson) END AS comments_hash
-        |FROM supplier s
-        |LEFT JOIN cj ON cj.pr_id = s.s_suppkey
-        |LEFT JOIN tot ON tot.pr_id = s.s_suppkey""".stripMargin,
+    /** Fuzzy entity linking (the profiled hot stage): deterministic noisy
+      * surface forms (part names with the last character clipped; every 3rd
+      * kept exact) linked back to the canonical part-name dictionary via
+      * broadcast exact match + trigram-MinHash blocking + Jaccard scoring. */
+    Query("kg_fuzzy_link", (s, dir) => {
+      val p = s.read.parquet(s"$dir/part.parquet")
+      val pname = regexp_replace(col("p_name"), " ", "_")
+      val surfaces = p.select(
+        when(col("p_partkey") % 3 === 0, pname)
+          .otherwise(pname.substr(lit(1), length(pname) - 1)).as("surface"))
+        .distinct()
+      val dict = p.select(pname.as("name")).distinct()
+      graft.link.FuzzyLink.link(surfaces, dict)
+    },
+        """WITH pn AS (SELECT DISTINCT replace(p_name,' ','_') AS name FROM part),
+          |sur AS (
+          |  SELECT DISTINCT CASE WHEN p_partkey % 3 = 0 THEN replace(p_name,' ','_')
+          |         ELSE substr(replace(p_name,' ','_'), 1, length(replace(p_name,' ','_'))-1) END AS surface
+          |  FROM part
+          |),
+          |exact AS (
+          |  SELECT surface, surface AS matched, CAST(1000000 AS BIGINT) AS score_ppm, 'exact' AS method
+          |  FROM sur WHERE surface IN (SELECT name FROM pn)
+          |),
+          |miss AS (SELECT surface FROM sur WHERE surface NOT IN (SELECT name FROM pn)),
+          |stg AS (
+          |  SELECT DISTINCT surface,
+          |         substr('^'||surface||'$', CAST(unnest(range(1, length('^'||surface||'$')-1)) AS INT), 3) AS tg
+          |  FROM miss
+          |),
+          |dtg AS (
+          |  SELECT DISTINCT name,
+          |         substr('^'||name||'$', CAST(unnest(range(1, length('^'||name||'$')-1)) AS INT), 3) AS tg
+          |  FROM pn
+          |),
+          |smh AS (SELECT surface, min(md5('0|'||tg)) AS m0,
+          |               min(md5('1|'||tg)) AS m1,
+          |               min(md5('2|'||tg)) AS m2,
+          |               min(md5('3|'||tg)) AS m3,
+          |               min(md5('4|'||tg)) AS m4,
+          |               min(md5('5|'||tg)) AS m5,
+          |               min(md5('6|'||tg)) AS m6,
+          |               min(md5('7|'||tg)) AS m7
+          |        FROM stg GROUP BY surface),
+          |dmh AS (SELECT name, min(md5('0|'||tg)) AS m0,
+          |               min(md5('1|'||tg)) AS m1,
+          |               min(md5('2|'||tg)) AS m2,
+          |               min(md5('3|'||tg)) AS m3,
+          |               min(md5('4|'||tg)) AS m4,
+          |               min(md5('5|'||tg)) AS m5,
+          |               min(md5('6|'||tg)) AS m6,
+          |               min(md5('7|'||tg)) AS m7
+          |        FROM dtg GROUP BY name),
+          |sbk AS (SELECT surface, CAST(0 AS BIGINT) AS band, md5(m0||m1) AS bucket FROM smh
+          |        UNION ALL SELECT surface, CAST(1 AS BIGINT), md5(m2||m3) FROM smh
+          |        UNION ALL SELECT surface, CAST(2 AS BIGINT), md5(m4||m5) FROM smh
+          |        UNION ALL SELECT surface, CAST(3 AS BIGINT), md5(m6||m7) FROM smh),
+          |dbk AS (SELECT name, CAST(0 AS BIGINT) AS band, md5(m0||m1) AS bucket FROM dmh
+          |        UNION ALL SELECT name, CAST(1 AS BIGINT), md5(m2||m3) FROM dmh
+          |        UNION ALL SELECT name, CAST(2 AS BIGINT), md5(m4||m5) FROM dmh
+          |        UNION ALL SELECT name, CAST(3 AS BIGINT), md5(m6||m7) FROM dmh),
+          |cand AS (SELECT DISTINCT s.surface, d.name AS cand
+          |         FROM sbk s JOIN dbk d ON s.band = d.band AND s.bucket = d.bucket),
+          |ssz AS (SELECT surface, count(*) AS sz FROM stg GROUP BY surface),
+          |dsz AS (SELECT name, count(*) AS sz FROM dtg GROUP BY name),
+          |inter AS (
+          |  SELECT c.surface, c.cand, count(*) AS inter
+          |  FROM cand c
+          |  JOIN stg ON stg.surface = c.surface
+          |  JOIN dtg ON dtg.name = c.cand AND dtg.tg = stg.tg
+          |  GROUP BY c.surface, c.cand
+          |),
+          |scored AS (
+          |  SELECT i.surface, i.cand,
+          |         CAST(round(CAST(i.inter AS DOUBLE) / CAST(ssz.sz + dsz.sz - i.inter AS DOUBLE) * 1000000) AS BIGINT) AS score_ppm
+          |  FROM inter i
+          |  JOIN ssz ON ssz.surface = i.surface
+          |  JOIN dsz ON dsz.name = i.cand
+          |),
+          |best AS (
+          |  SELECT surface, cand AS matched, score_ppm, 'fuzzy' AS method FROM (
+          |    SELECT *, row_number() OVER (PARTITION BY surface ORDER BY score_ppm DESC, cand) AS rk
+          |    FROM scored WHERE score_ppm >= 300000
+          |  ) WHERE rk = 1
+          |)
+          |SELECT * FROM exact UNION ALL SELECT * FROM best""".stripMargin),
 
-    "kg_issue_pr_edges" -> withBase(
-      """, refs AS (SELECT conv_id, CAST(2*k AS BIGINT) AS turn_idx,
-        |                 CAST(pk % 1500 AS BIGINT) AS issue_id, sname
-        |          FROM li WHERE k % 5 = 0),
-        |iss AS (SELECT DISTINCT CAST(p_partkey % 997 AS BIGINT) AS issue_id FROM part),
-        |prs AS (SELECT 'supplier:'||s_name AS sname, CAST(s_suppkey AS BIGINT) AS pr_id FROM supplier)
-        |SELECT DISTINCT r.issue_id, p.pr_id
-        |FROM refs r JOIN iss ON r.issue_id = iss.issue_id
-        |JOIN prs p ON r.sname = p.sname""".stripMargin),
+    /** Grouped membership lists (reference import grouping's
+      * `import_file_ids: list`, knowledge_graph.py:933-941): per entity, the
+      * sorted set of conversations that define it — an ArrayType cell.
+      * Aggregated in two phases through Salt.twoPhaseAgg (partial
+      * collect_set by (key, salt), then merge) so one hot entity's state
+      * never accumulates on a single reducer. The ArrayType cell stays
+      * engine-internal; the comparison boundary is the scalar
+      * `array_join` form (driver comparator sorts raw cells —
+      * CORRECTNESS_r02 err row). */
+    Query("kg_entity_convs", (s, dir) => {
+      val defs = Pipeline.mentions(s, dir)
+        .filter(col("kind") === "entity_def")
+        .select(col("subj").as("canonical_name"), col("conv_id"))
+      graft.canonical.Salt.twoPhaseAgg(defs, "canonical_name", s = 8,
+        saltFrom = Seq("conv_id"))(
+        partial = Seq(collect_set(col("conv_id")).as("cs")),
+        merge = Seq(sort_array(array_distinct(flatten(collect_list(col("cs")))))
+          .as("conv_ids")))
+        .select(col("canonical_name"),
+          array_join(col("conv_ids"), ",").as("conv_ids_csv"),
+          size(col("conv_ids")).cast("long").as("n_convs"))
+    },
+      withBase(
+        """SELECT canonical_name,
+          |       array_to_string(list_sort(list_distinct(list(conv_id))), ',') AS conv_ids_csv,
+          |       CAST(len(list_distinct(list(conv_id))) AS BIGINT) AS n_convs
+          |FROM (
+          |  SELECT cust AS canonical_name, conv_id FROM oc
+          |  UNION ALL SELECT pname, conv_id FROM li
+          |  UNION ALL SELECT sname, conv_id FROM li
+          |)
+          |GROUP BY canonical_name""".stripMargin)),
 
-    "kg_dev_nodes" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS dev_id, n_name AS dev_name,
-        |       lower(replace(n_name,' ','_'))||'@dev.example' AS dev_email,
-        |       'Team '||n_name AS dev_full
-        |FROM nation""".stripMargin,
+    /** Container/inheritance edges (reference class_class_edges
+      * 'inherits_from' + the reverse 'contains' direction,
+      * knowledge_graph.py:1122-1197): distinct (child, parent) pairs from
+      * `extends` clauses, remapped to dense node IDs with size-gated joins. */
+    Query("kg_containment", (s, dir) => {
+      val pairs = Pipeline.mentions(s, dir)
+        .filter(col("kind") === "entity_def" && col("parent") =!= "")
+        .select(col("subj").as("child"), col("parent"))
+        .distinct()
+      val both = Joins.remapBoth(pairs,
+        Pipeline.nodes(s, dir), "canonical_name", "node_id",
+        "child", "parent", "child_id", "parent_id")
+      // one pass for both directions (a self-union re-executes the remap
+      // joins per direction — same fix as qSegmentEntityEdges)
+      both.select(explode(array(
+        struct(lit("inherits_from").as("edge_type"),
+          col("child_id").as("src_id"), col("parent_id").as("dst_id"),
+          col("child").as("src_name"), col("parent").as("dst_name")),
+        struct(lit("contains").as("edge_type"),
+          col("parent_id").as("src_id"), col("child_id").as("dst_id"),
+          col("parent").as("src_name"), col("child").as("dst_name"))))
+        .as("e"))
+        .select(col("e.edge_type"), col("e.src_id"), col("e.dst_id"),
+          col("e.src_name"), col("e.dst_name"))
+    },
+      withBase(
+        """, pairs AS (SELECT DISTINCT pname AS child, cat AS parent FROM li),
+          |j AS (
+          |  SELECT p.child, p.parent, nc.node_id AS child_id, np.node_id AS parent_id
+          |  FROM pairs p
+          |  JOIN nodes nc ON p.child = nc.canonical_name
+          |  JOIN nodes np ON p.parent = np.canonical_name
+          |)
+          |SELECT 'inherits_from' AS edge_type, child_id AS src_id, parent_id AS dst_id,
+          |       child AS src_name, parent AS dst_name FROM j
+          |UNION ALL
+          |SELECT 'contains', parent_id, child_id, parent, child FROM j""".stripMargin)),
 
-    "kg_pyg_nodes" -> withBase(
-      """SELECT node_type,
-        |       CAST(row_number() OVER (PARTITION BY node_type ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS local_idx,
-        |       node_id, canonical_name
-        |FROM nodes""".stripMargin),
+    /** Rich issue properties (reference issue_nodes carry title/body/
+      * labels:list<str> and comments:list<struct{id,user,created_at,
+      * updated_at,body}> — its richest cell type, knowledge_graph.py:
+      * 669-700): one row per issue with deterministic title/body/state, the
+      * sorted label set, and a comments ArrayType(StructType) column built
+      * by sort_array(collect_list(struct(...))) — one comment per part row
+      * mapping to the issue. The array/struct cells stay engine-internal;
+      * the comparison boundary is scalar: label CSV + counts + md5 of the
+      * canonical to_json rendering of the sorted comments array (X8's
+      * to_json direction — the oracle reconstructs the identical compact
+      * JSON string via string_agg, so the hash certifies every nested
+      * field). The groupBy key (issue_id) has bounded fan-in (parts per
+      * issue), map-side combinable collect_list state. */
+    Query("kg_issue_nodes_rich", (s, dir) => {
+      val epoch = to_date(lit("1995-01-01"))
+      val base = s.read.parquet(s"$dir/part.parquet").select(
+        (col("p_partkey") % 997).cast("long").as("issue_id"),
+        col("p_partkey").cast("long").as("cid"),
+        regexp_replace(col("p_brand"), "[ #]", "_").as("label"),
+        regexp_replace(col("p_name"), " ", "_").as("pname"))
+      val withC = base.select(col("issue_id"), col("label"), col("pname"),
+        struct(
+          col("cid"),
+          concat(lit("dev_"), (col("cid") % 25).cast("string")).as("cuser"),
+          date_format(date_add(epoch, (col("cid") % 1000).cast("int")),
+            "yyyy-MM-dd").as("created_at"),
+          date_format(date_add(epoch, (col("cid") % 1000 + 7).cast("int")),
+            "yyyy-MM-dd").as("updated_at"),
+          concat(lit("comment on "), col("pname")).as("body")).as("c"))
+      withC.groupBy(col("issue_id"))
+        .agg(sort_array(collect_list(col("c"))).as("comments"),
+          sort_array(collect_set(col("label"))).as("labels"),
+          min(col("pname")).as("first_part"))
+        .select(col("issue_id"),
+          concat(lit("Issue #"), col("issue_id").cast("string")).as("title"),
+          concat(lit("Tracking "), col("first_part")).as("body"),
+          element_at(array(lit("open"), lit("closed"), lit("merged")),
+            (col("issue_id") % 3 + 1).cast("int")).as("state"),
+          array_join(col("labels"), ",").as("labels_csv"),
+          size(col("labels")).cast("long").as("n_labels"),
+          size(col("comments")).cast("long").as("n_comments"),
+          md5(to_json(col("comments"))).as("comments_hash"))
+    },
+        """WITH base AS (
+          |  SELECT CAST(p_partkey % 997 AS BIGINT) AS issue_id,
+          |         CAST(p_partkey AS BIGINT) AS cid,
+          |         regexp_replace(p_brand, '[ #]', '_', 'g') AS label,
+          |         replace(p_name, ' ', '_') AS pname
+          |  FROM part
+          |),
+          |cm AS (
+          |  SELECT issue_id, cid,
+          |         'dev_'||CAST(cid % 25 AS VARCHAR) AS cuser,
+          |         strftime(DATE '1995-01-01' + CAST(cid % 1000 AS INTEGER), '%Y-%m-%d') AS created_at,
+          |         strftime(DATE '1995-01-01' + CAST(cid % 1000 + 7 AS INTEGER), '%Y-%m-%d') AS updated_at,
+          |         'comment on '||pname AS body
+          |  FROM base
+          |),
+          |cj AS (
+          |  SELECT issue_id,
+          |         '['||string_agg('{"cid":'||cid||',"cuser":"'||cuser||'","created_at":"'||created_at||'","updated_at":"'||updated_at||'","body":"'||body||'"}', ',' ORDER BY cid)||']' AS cjson,
+          |         CAST(count(*) AS BIGINT) AS n_comments
+          |  FROM cm GROUP BY issue_id
+          |),
+          |lb AS (
+          |  SELECT issue_id,
+          |         array_to_string(list_sort(list(DISTINCT label)), ',') AS labels_csv,
+          |         CAST(len(list_distinct(list(label))) AS BIGINT) AS n_labels,
+          |         min(pname) AS first_part
+          |  FROM base GROUP BY issue_id
+          |)
+          |SELECT cj.issue_id,
+          |       'Issue #'||cj.issue_id AS title,
+          |       'Tracking '||lb.first_part AS body,
+          |       CASE CAST(cj.issue_id % 3 AS INT) WHEN 0 THEN 'open' WHEN 1 THEN 'closed' ELSE 'merged' END AS state,
+          |       lb.labels_csv, lb.n_labels, cj.n_comments,
+          |       md5(cj.cjson) AS comments_hash
+          |FROM cj JOIN lb USING(issue_id)""".stripMargin),
 
-    "kg_pyg_edges" -> withBase(
-      """, loc AS (
-        |  SELECT canonical_name, node_type,
-        |         CAST(row_number() OVER (PARTITION BY node_type ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS local_idx
-        |  FROM nodes
-        |)
-        |SELECT s.node_type AS src_type, t.pred AS edge_type,
-        |       d.node_type AS dst_type,
-        |       s.local_idx AS src_local, d.local_idx AS dst_local,
-        |       CAST(count(*) AS BIGINT) AS n_multi
-        |FROM triples t
-        |JOIN loc s ON t.subj = s.canonical_name
-        |JOIN loc d ON t.obj = d.canonical_name
-        |GROUP BY 1, 2, 3, 4, 5""".stripMargin),
+    /** Side-table linking (reference issue_function_edges,
+      * knowledge_graph.py:1282-1351): extract `ref #N` cross-references from
+      * transcript text (regexp_extract_all -> explode), validate membership
+      * against the issues side table, attach to the entity ordered in the
+      * same turn, dedupe. */
+    Query("kg_issue_edges", (s, dir) => {
+      val valid = issueRefsOf(s, dir)
+        .join(Joins.dim(issuesOf(s, dir)), Seq("issue_id"))
+      val ordered = Pipeline.triples(s, dir)
+        .filter(col("pred") === "ordered")
+        .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
+          col("obj").as("canonical_name"))
+      val linked = valid.join(ordered, Seq("conv_id", "turn_idx"))
+      val n = Pipeline.nodes(s, dir)
+        .select(col("canonical_name"), col("node_id"))
+      Joins
+        .innerSkewSafe(linked, n, "canonical_name", saltFrom = Seq("conv_id"))
+        .select(col("issue_id"), col("state"), col("node_id"), col("canonical_name"))
+        .distinct()
+    },
+      withBase(
+        """, refs AS (SELECT conv_id, CAST(2*k AS BIGINT) AS turn_idx,
+          |                CAST(pk % 1500 AS BIGINT) AS issue_id, pname
+          |         FROM li WHERE k % 5 = 0),
+          |iss AS (SELECT DISTINCT CAST(p_partkey % 997 AS BIGINT) AS issue_id FROM part),
+          |valid AS (SELECT r.issue_id, r.pname FROM refs r JOIN iss ON r.issue_id = iss.issue_id)
+          |SELECT DISTINCT v.issue_id,
+          |       CASE CAST(v.issue_id % 3 AS INT) WHEN 0 THEN 'open' WHEN 1 THEN 'closed' ELSE 'merged' END AS state,
+          |       n.node_id, n.canonical_name
+          |FROM valid v JOIN nodes n ON v.pname = n.canonical_name""".stripMargin)),
 
-    "kg_config_nodes" ->
-      s"""WITH tr AS (${Transcripts.fromTpchOracleSql}),
-        |$hierNodesCte
-        |SELECT tr.conv_id, tr.turn_idx, tr.tool, h.hier_id,
-        |       CAST(octet_length(encode(tr.text)) AS BIGINT) AS n_bytes,
-        |       md5(tr.text) AS config_hash
-        |FROM tr JOIN hid h ON 'conv:'||tr.conv_id = h.name
-        |WHERE tr.tool <> ''""".stripMargin,
+    /** Hierarchy↔entity bridge (reference file_function_edges,
+      * knowledge_graph.py:953-1040): `conv:<id> contains_entity <node>` for
+      * every entity defined in that conversation — the edge family that lets
+      * a consumer navigate from a browse-hierarchy folder into the entity
+      * graph (the two ID spaces were disconnected before, VERDICT r02
+      * missing #1). Both remaps are size-gated. */
+    Query("kg_conv_entity_edges", (s, dir) => {
+      val defs = Pipeline.mentions(s, dir).filter(col("kind") === "entity_def")
+        .select(col("conv_id"), col("subj").as("canonical_name")).distinct()
+      val n = Pipeline.nodes(s, dir)
+        .select(col("canonical_name"), col("node_id"))
+      val withNode = Joins
+        .innerSkewSafe(defs, n, "canonical_name", saltFrom = Seq("conv_id"))
+        .withColumn("name", concat(lit("conv:"), col("conv_id")))
+      val hier = Pipeline.hierNodes(s, dir)
+        .filter(!col("is_folder")).select(col("name"), col("hier_id"))
+      Joins
+        .innerSkewSafe(withNode, hier, "name", saltFrom = Seq("canonical_name"))
+        .select(lit("contains_entity").as("edge_type"),
+          col("hier_id"), col("node_id"), col("conv_id"), col("canonical_name"))
+    },
+        s"""WITH $baseCtes, $hierNodesCte,
+          |defs AS (
+          |  SELECT DISTINCT conv_id, canonical_name FROM (
+          |    SELECT conv_id, cust AS canonical_name FROM oc
+          |    UNION ALL SELECT conv_id, pname FROM li
+          |    UNION ALL SELECT conv_id, sname FROM li
+          |  )
+          |)
+          |SELECT 'contains_entity' AS edge_type, h.hier_id, n.node_id,
+          |       d.conv_id, d.canonical_name
+          |FROM defs d
+          |JOIN nodes n ON d.canonical_name = n.canonical_name
+          |JOIN hid h ON h.name = 'conv:'||d.conv_id""".stripMargin),
 
-    "kg_artifact_nodes" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS artifact_id,
-        |       'artifact-'||o_orderkey AS artifact_name,
-        |       CAST((o_orderkey % 100000) * 3 + 17 AS BIGINT) AS artifact_size,
-        |       CAST(o_orderdate AS TIMESTAMP) AS created_at,
-        |       CAST(CAST(o_orderdate AS DATE) + CAST(o_orderkey % 30 AS INTEGER) AS TIMESTAMP) AS updated_at,
-        |       'c'||o_orderkey AS conv_id
-        |FROM orders""".stripMargin,
+    /** Cluster nodes (reference cluster_nodes, knowledge_graph.py:1201-1209):
+      * one row per cluster with its member count and a deterministic
+      * summary — the first member name, standing in for the reference's
+      * LLM-generated cluster_summary (knowledge_graph.py:1275-1276). */
+    Query("kg_cluster_nodes", (s, dir) =>
+      nodeClusters(s, dir)
+        .groupBy(col("cluster").cast("long").as("cluster_id"))
+        .agg(count(lit(1)).as("n_members"),
+          min(col("canonical_name")).as("cluster_summary"))
+        .select(concat(lit("cluster:"), col("cluster_id").cast("string"))
+          .as("cluster_name"), col("cluster_id"), col("n_members"),
+          col("cluster_summary")),
+        s"""WITH $baseCtes, ${OpsEntry.clusterCtes}
+          |SELECT 'cluster:'||cluster AS cluster_name,
+          |       CAST(cluster AS BIGINT) AS cluster_id,
+          |       CAST(count(*) AS BIGINT) AS n_members,
+          |       min(n.canonical_name) AS cluster_summary
+          |FROM a1 JOIN nodes n ON a1.vec_id = n.node_id
+          |GROUP BY cluster""".stripMargin),
 
-    "kg_dev_edges" -> withBase(
-      """, prn AS (SELECT CAST(s_nationkey AS BIGINT) AS dev_id,
-        |                CAST(s_suppkey AS BIGINT) AS pr_number,
-        |                'supplier:'||s_name AS cname FROM supplier)
-        |SELECT p.dev_id, n.node_id AS func_id, p.pr_number
-        |FROM prn p JOIN nodes n ON p.cname = n.canonical_name""".stripMargin),
+    /** Cluster→entity edges (reference cluster_function_edges,
+      * knowledge_graph.py:1210-1218, J8): every embedded node linked to its
+      * semantic cluster. */
+    Query("kg_cluster_edges", (s, dir) =>
+      nodeClusters(s, dir).select(
+        lit("in_cluster").as("edge_type"),
+        concat(lit("cluster:"), col("cluster").cast("string")).as("cluster_name"),
+        col("cluster").cast("long").as("cluster_id"),
+        col("node_id"), col("canonical_name")),
+        s"""WITH $baseCtes, ${OpsEntry.clusterCtes}
+          |SELECT 'in_cluster' AS edge_type,
+          |       'cluster:'||cluster AS cluster_name,
+          |       CAST(cluster AS BIGINT) AS cluster_id,
+          |       n.node_id, n.canonical_name
+          |FROM a1 JOIN nodes n ON a1.vec_id = n.node_id""".stripMargin),
 
-    "kg_nodes_vec" -> withBase(
-      """, e AS (
-        |  SELECT vec_id AS node_id, len(embedding) AS emb_dim,
-        |         array_to_string(list_transform(embedding,
-        |           x -> CAST(CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT) AS VARCHAR)), ',') AS emb_csv
-        |  FROM embeddings
-        |)
-        |SELECT n.node_id, n.canonical_name,
-        |       CAST(coalesce(e.emb_dim, 0) AS BIGINT) AS emb_dim,
-        |       coalesce(e.emb_csv, '') AS emb_csv
-        |FROM nodes n LEFT JOIN e ON n.node_id = e.node_id""".stripMargin),
-  ) ++ OpsEntry.oracleSql ++ RelEntry.oracleSql
+    /** PR/developer side-table analog (reference pr_nodes + developer FKs,
+      * knowledge_graph.py:704-752, 1355-1481): one "pull request" per
+      * supplier, linked to its supplier node, carrying a NULLABLE long
+      * property (`merged_by`) — the reference's nullable Int64 FK coercion
+      * (knowledge_graph.py:274-279). NULLs cross the comparison boundary. */
+    Query("kg_pr_edges", (s, dir) => {
+      val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+        col("s_suppkey").cast("long").as("pr_id"),
+        concat(lit("supplier:"), col("s_name")).as("canonical_name"),
+        when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
+          .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
+      val n = Pipeline.nodes(s, dir)
+        .select(col("canonical_name"), col("node_id"))
+      // prs is distinct per canonical_name (one PR per supplier): gate the
+      // node-table hint, no salting needed
+      prs.join(Joins.dim(n), Seq("canonical_name"))
+        .select(col("pr_id"), col("node_id"), col("canonical_name"),
+          col("merged_by"))
+    },
+      withBase(
+        """SELECT CAST(s_suppkey AS BIGINT) AS pr_id, n.node_id, n.canonical_name,
+          |       CASE WHEN s_suppkey % 5 = 0 THEN NULL
+          |            ELSE CAST(s_suppkey * 37 % 1000 AS BIGINT) END AS merged_by
+          |FROM supplier
+          |JOIN nodes n ON 'supplier:'||s_name = n.canonical_name""".stripMargin)),
+
+    /** Rich PR properties (reference pr_nodes carry pr_title/pr_body/
+      * pr_open plus comments CAPPED AT 3 PER PR, knowledge_graph.py:
+      * 704-752 + 777-780 — the one §2.8 O-row shape, O3, the issue side
+      * doesn't exercise): one "pull request" per supplier with
+      * deterministic title/body/open flag, the nullable merged_by FK
+      * (same coercion as [[qPrEdges]]), and a comments
+      * ArrayType(StructType) column built by
+      * `slice(sort_array(collect_list(struct(...))), 1, 3)` — collect,
+      * total order, keep the first three. Every struct field is a pure
+      * function of (l_orderkey, l_linenumber), so the corpus's duplicate
+      * (orderkey, linenumber) rows yield IDENTICAL structs and the sort
+      * is unambiguous across engines. Comparison boundary is scalar:
+      * total + kept counts and md5 of the canonical to_json rendering of
+      * the sliced array (the oracle rebuilds the identical compact JSON
+      * via row_number <= 3 + string_agg). Fan-in per PR is lineitems per
+      * supplier — bounded; collect_list state is map-side combinable. */
+    Query("kg_pr_nodes_rich", (s, dir) => {
+      val epoch = to_date(lit("1995-01-01"))
+      val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+        col("s_suppkey").cast("long").as("pr_id"),
+        col("s_name"),
+        when(col("s_suppkey") % 5 === 0, lit(null).cast("long"))
+          .otherwise((col("s_suppkey") * 37 % 1000).cast("long")).as("merged_by"))
+      val cm0 = s.read.parquet(s"$dir/lineitem.parquet").select(
+        col("l_suppkey").cast("long").as("pr_id"),
+        (col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("cid"),
+        col("l_orderkey").cast("long").as("ok"))
+      val cm = cm0.select(col("pr_id"), struct(
+        col("cid"),
+        concat(lit("dev_"), (col("cid") % 25).cast("string")).as("cuser"),
+        date_format(date_add(epoch, (col("cid") % 1000).cast("int")),
+          "yyyy-MM-dd").as("created_at"),
+        concat(lit("comment on order "), col("ok").cast("string")).as("body"))
+        .as("c"))
+      val agg = cm.groupBy(col("pr_id"))
+        .agg(slice(sort_array(collect_list(col("c"))), 1, 3).as("comments"),
+          count(lit(1)).as("n_comments_total"))
+      prs.join(agg, Seq("pr_id"), "left")
+        .select(col("pr_id"),
+          concat(lit("PR #"), col("pr_id").cast("string")).as("pr_title"),
+          concat(lit("Proposed by "), col("s_name")).as("pr_body"),
+          (col("pr_id") % 4 === 0).cast("long").as("pr_open"),
+          col("merged_by"),
+          coalesce(col("n_comments_total"), lit(0L)).as("n_comments_total"),
+          coalesce(size(col("comments")), lit(0)).cast("long").as("n_comments_kept"),
+          coalesce(md5(to_json(col("comments"))), lit("")).as("comments_hash"))
+    },
+        """WITH cm AS (
+          |  SELECT CAST(l_suppkey AS BIGINT) AS pr_id,
+          |         CAST(l_orderkey * 8 + l_linenumber AS BIGINT) AS cid,
+          |         CAST(l_orderkey AS BIGINT) AS ok
+          |  FROM lineitem
+          |),
+          |cm2 AS (
+          |  SELECT pr_id, cid,
+          |         'dev_'||CAST(cid % 25 AS VARCHAR) AS cuser,
+          |         strftime(DATE '1995-01-01' + CAST(cid % 1000 AS INTEGER), '%Y-%m-%d') AS created_at,
+          |         'comment on order '||CAST(ok AS VARCHAR) AS body
+          |  FROM cm
+          |),
+          |rk AS (
+          |  SELECT *, row_number() OVER (PARTITION BY pr_id ORDER BY cid, body) AS r
+          |  FROM cm2
+          |),
+          |cj AS (
+          |  SELECT pr_id,
+          |         '['||string_agg('{"cid":'||cid||',"cuser":"'||cuser||'","created_at":"'||created_at||'","body":"'||body||'"}', ',' ORDER BY cid, body)||']' AS cjson,
+          |         CAST(count(*) AS BIGINT) AS n_kept
+          |  FROM rk WHERE r <= 3 GROUP BY pr_id
+          |),
+          |tot AS (SELECT pr_id, CAST(count(*) AS BIGINT) AS n_total FROM cm2 GROUP BY pr_id)
+          |SELECT CAST(s.s_suppkey AS BIGINT) AS pr_id,
+          |       'PR #'||CAST(s.s_suppkey AS VARCHAR) AS pr_title,
+          |       'Proposed by '||s.s_name AS pr_body,
+          |       CAST(CASE WHEN s.s_suppkey % 4 = 0 THEN 1 ELSE 0 END AS BIGINT) AS pr_open,
+          |       CASE WHEN s.s_suppkey % 5 = 0 THEN NULL
+          |            ELSE CAST(s.s_suppkey * 37 % 1000 AS BIGINT) END AS merged_by,
+          |       coalesce(tot.n_total, 0) AS n_comments_total,
+          |       coalesce(cj.n_kept, 0) AS n_comments_kept,
+          |       CASE WHEN cj.cjson IS NULL THEN '' ELSE md5(cj.cjson) END AS comments_hash
+          |FROM supplier s
+          |LEFT JOIN cj ON cj.pr_id = s.s_suppkey
+          |LEFT JOIN tot ON tot.pr_id = s.s_suppkey""".stripMargin),
+
+    /** Vector property on nodes (reference docstring_embedding,
+      * hierarchical_graph.py:242-257): the node table left-joined to the
+      * embeddings side table on the deterministic vec_id == node_id key.
+      * The ArrayType(Float) column lives on the frame internally; the
+      * comparison boundary is scalar (ppm-quantized CSV + dim count). */
+    Query("kg_nodes_vec", (s, dir) => {
+      val e = s.read.parquet(s"$dir/embeddings.parquet").select(
+        col("vec_id").cast("long").as("node_id"), col("embedding"))
+      Pipeline.nodes(s, dir)
+        .join(e, Seq("node_id"), "left")
+        .select(col("node_id"), col("canonical_name"),
+          coalesce(size(col("embedding")), lit(0)).cast("long").as("emb_dim"),
+          coalesce(array_join(transform(col("embedding"),
+            x => round(x.cast("double") * 1e6).cast("long").cast("string")), ","),
+            lit("")).as("emb_csv"))
+    },
+      withBase(
+        """, e AS (
+          |  SELECT vec_id AS node_id, len(embedding) AS emb_dim,
+          |         array_to_string(list_transform(embedding,
+          |           x -> CAST(CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT) AS VARCHAR)), ',') AS emb_csv
+          |  FROM embeddings
+          |)
+          |SELECT n.node_id, n.canonical_name,
+          |       CAST(coalesce(e.emb_dim, 0) AS BIGINT) AS emb_dim,
+          |       coalesce(e.emb_csv, '') AS emb_csv
+          |FROM nodes n LEFT JOIN e ON n.node_id = e.node_id""".stripMargin)),
+
+    /** Issue→PR bridge (reference issue_to_pr_edges,
+      * knowledge_graph.py:1282-1307): issue numbers cross-referenced in the
+      * turns where a PR's supplier appears, validated against the issues
+      * side table, emitted as distinct (issue, pr) id pairs — the
+      * reference's source/target edge shape. Both dims are size-gated; the
+      * per-supplier fan-in join is salted from conv_id. */
+    Query("kg_issue_pr_edges", (s, dir) => {
+      val valid = issueRefsOf(s, dir).join(
+        Joins.dim(issuesOf(s, dir).select("issue_id")),
+        Seq("issue_id"))
+      val supplied = Pipeline.triples(s, dir)
+        .filter(col("pred") === "supplies")
+        .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
+          col("subj").as("canonical_name"))
+      val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+        concat(lit("supplier:"), col("s_name")).as("canonical_name"),
+        col("s_suppkey").cast("long").as("pr_id"))
+      val linked = valid.join(supplied, Seq("conv_id", "turn_idx"))
+      Joins
+        .innerSkewSafe(linked, prs, "canonical_name", saltFrom = Seq("conv_id"))
+        .select(col("issue_id"), col("pr_id"))
+        .distinct()
+    },
+      withBase(
+        """, refs AS (SELECT conv_id, CAST(2*k AS BIGINT) AS turn_idx,
+          |                 CAST(pk % 1500 AS BIGINT) AS issue_id, sname
+          |          FROM li WHERE k % 5 = 0),
+          |iss AS (SELECT DISTINCT CAST(p_partkey % 997 AS BIGINT) AS issue_id FROM part),
+          |prs AS (SELECT 'supplier:'||s_name AS sname, CAST(s_suppkey AS BIGINT) AS pr_id FROM supplier)
+          |SELECT DISTINCT r.issue_id, p.pr_id
+          |FROM refs r JOIN iss ON r.issue_id = iss.issue_id
+          |JOIN prs p ON r.sname = p.sname""".stripMargin)),
+
+    /** Developer dim (reference developers_df — dev_id/dev_name/dev_email/
+      * dev_full, knowledge_graph.py:1355-1380): one developer per nation,
+      * the PR-author vocabulary. Contact strings are deterministically
+      * built (conditional concat, X-family), never parsed. */
+    Query("kg_dev_nodes", (s, dir) =>
+      s.read.parquet(s"$dir/nation.parquet").select(
+        col("n_nationkey").cast("long").as("dev_id"),
+        col("n_name").as("dev_name"),
+        concat(lower(regexp_replace(col("n_name"), " ", "_")),
+          lit("@dev.example")).as("dev_email"),
+        concat(lit("Team "), col("n_name")).as("dev_full")),
+        """SELECT CAST(n_nationkey AS BIGINT) AS dev_id, n_name AS dev_name,
+          |       lower(replace(n_name,' ','_'))||'@dev.example' AS dev_email,
+          |       'Team '||n_name AS dev_full
+          |FROM nation""".stripMargin),
+
+    /** PR-author→function edges (reference dev_edges_df — dev_id, func_id,
+      * pr_number: the PR→func ⋈ PR→author join,
+      * knowledge_graph.py:1407-1417): each PR's linked entity attributed to
+      * the PR author (the supplier's nation). The node side is size-gated. */
+    Query("kg_dev_edges", (s, dir) => {
+      val prs = s.read.parquet(s"$dir/supplier.parquet").select(
+        col("s_suppkey").cast("long").as("pr_number"),
+        col("s_nationkey").cast("long").as("dev_id"),
+        concat(lit("supplier:"), col("s_name")).as("canonical_name"))
+      val n = Pipeline.nodes(s, dir)
+        .select(col("canonical_name"), col("node_id").as("func_id"))
+      prs.join(Joins.dim(n), Seq("canonical_name"))
+        .select(col("dev_id"), col("func_id"), col("pr_number"))
+    },
+      withBase(
+        """, prn AS (SELECT CAST(s_nationkey AS BIGINT) AS dev_id,
+          |                CAST(s_suppkey AS BIGINT) AS pr_number,
+          |                'supplier:'||s_name AS cname FROM supplier)
+          |SELECT p.dev_id, n.node_id AS func_id, p.pr_number
+          |FROM prn p JOIN nodes n ON p.cname = n.canonical_name""".stripMargin)),
+
+    /** Artifact side table (reference artifacts — ID, artifact_name,
+      * artifact_size:int, created_at/updated_at:timestamp,
+      * knowledge_graph.py:852-872): one build artifact per conversation,
+      * carrying the timestamp-typed properties the reference's scraped
+      * artifact rows have. Size is integer-derived so engines agree
+      * exactly; timestamps cross the comparison boundary natively. */
+    Query("kg_artifact_nodes", (s, dir) =>
+      s.read.parquet(s"$dir/orders.parquet").select(
+        col("o_orderkey").cast("long").as("artifact_id"),
+        concat(lit("artifact-"), col("o_orderkey").cast("string"))
+          .as("artifact_name"),
+        ((col("o_orderkey") % 100000) * 3 + 17).cast("long").as("artifact_size"),
+        col("o_orderdate").cast("timestamp").as("created_at"),
+        // date_add truncates a timestamp input to DATE (midnight) — the
+        // oracle truncates identically (CAST AS DATE + n), so the two
+        // engines agree even on a corpus whose o_orderdate carries a
+        // nonzero time-of-day
+        date_add(col("o_orderdate"), (col("o_orderkey") % 30).cast("int"))
+          .cast("timestamp").as("updated_at"),
+        concat(lit("c"), col("o_orderkey").cast("string")).as("conv_id")),
+        """SELECT CAST(o_orderkey AS BIGINT) AS artifact_id,
+          |       'artifact-'||o_orderkey AS artifact_name,
+          |       CAST((o_orderkey % 100000) * 3 + 17 AS BIGINT) AS artifact_size,
+          |       CAST(o_orderdate AS TIMESTAMP) AS created_at,
+          |       CAST(CAST(o_orderdate AS DATE) + CAST(o_orderkey % 30 AS INTEGER) AS TIMESTAMP) AS updated_at,
+          |       'c'||o_orderkey AS conv_id
+          |FROM orders""".stripMargin),
+
+    /** Config side table + hierarchy linkage (reference config_nodes with
+      * raw file bytes in a cell + file_config_edges,
+      * knowledge_graph.py:1061-1116; content read call_graph.py:166-184):
+      * every tool-bearing turn contributes a config row whose content
+      * travels as a BINARY cell (utf-8 encode); the comparison boundary is
+      * scalar (byte count + md5). Each row links to its conversation's
+      * hierarchy leaf exactly like file_config_edges links configs into the
+      * folder tree. */
+    Query("kg_config_nodes", (s, dir) => {
+      val t = Pipeline.transcripts(s, dir).filter(col("tool") =!= "")
+        .select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
+          col("tool"), encode(col("text"), "UTF-8").as("config"))
+        .withColumn("name", concat(lit("conv:"), col("conv_id")))
+      val hier = Pipeline.hierNodes(s, dir)
+        .filter(!col("is_folder")).select(col("name"), col("hier_id"))
+      Joins.innerSkewSafe(t, hier, "name", saltFrom = Seq("conv_id"))
+        .select(col("conv_id"), col("turn_idx"), col("tool"), col("hier_id"),
+          octet_length(col("config")).cast("long").as("n_bytes"),
+          md5(col("config")).as("config_hash"))
+    },
+        s"""WITH tr AS (${Transcripts.fromTpchOracleSql}),
+          |$hierNodesCte
+          |SELECT tr.conv_id, tr.turn_idx, tr.tool, h.hier_id,
+          |       CAST(octet_length(encode(tr.text)) AS BIGINT) AS n_bytes,
+          |       md5(tr.text) AS config_hash
+          |FROM tr JOIN hid h ON 'conv:'||tr.conv_id = h.name
+          |WHERE tr.tool <> ''""".stripMargin),
+
+    /** PyG-style HeteroData node export (reference S11,
+      * hierarchical_graph.py:398-427): per-type CONTIGUOUS local indices —
+      * the tensor row index — assigned by the per-group bucketed assigner
+      * (no global or per-type single-task window), plus the global id for
+      * joining back. */
+    Query("kg_pyg_nodes", (s, dir) =>
+      Pipeline.pygLocal(s, dir).select(col("node_type"), col("local_idx"),
+        col("node_id"), col("canonical_name")),
+      withBase(
+        """SELECT node_type,
+          |       CAST(row_number() OVER (PARTITION BY node_type ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS local_idx,
+          |       node_id, canonical_name
+          |FROM nodes""".stripMargin)),
+
+    /** PyG-style typed edge index (reference HeteroData edge_index per
+      * (src_type, relation, dst_type) triple): endpoints remapped to the
+      * per-type local indices via skew-safe joins, deduped with a
+      * multiplicity count (edge_index columns + edge weight). */
+    Query("kg_pyg_edges", (s, dir) => {
+      val loc = Pipeline.pygLocal(s, dir)
+      val t = Pipeline.triples(s, dir)
+      val src = loc.select(col("canonical_name").as("subj"),
+        col("node_type").as("src_type"), col("local_idx").as("src_local"))
+      val dst = loc.select(col("canonical_name").as("obj"),
+        col("node_type").as("dst_type"), col("local_idx").as("dst_local"))
+      val saltFrom = Seq("conv_id", "turn_idx", "mention_idx")
+      Joins.innerSkewSafe(
+          Joins.innerSkewSafe(t, src, "subj", saltFrom),
+          dst, "obj", saltFrom)
+        .groupBy(col("src_type"), col("pred").as("edge_type"),
+          col("dst_type"), col("src_local"), col("dst_local"))
+        .agg(count(lit(1)).as("n_multi"))
+    },
+      withBase(
+        """, loc AS (
+          |  SELECT canonical_name, node_type,
+          |         CAST(row_number() OVER (PARTITION BY node_type ORDER BY substr(md5(canonical_name),1,2), canonical_name) - 1 AS BIGINT) AS local_idx
+          |  FROM nodes
+          |)
+          |SELECT s.node_type AS src_type, t.pred AS edge_type,
+          |       d.node_type AS dst_type,
+          |       s.local_idx AS src_local, d.local_idx AS dst_local,
+          |       CAST(count(*) AS BIGINT) AS n_multi
+          |FROM triples t
+          |JOIN loc s ON t.subj = s.canonical_name
+          |JOIN loc d ON t.obj = d.canonical_name
+          |GROUP BY 1, 2, 3, 4, 5""".stripMargin))
+  )
 }

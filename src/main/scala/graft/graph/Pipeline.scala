@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, md5, min}
+import org.apache.spark.sql.functions.{col, min}
 
 import graft.sources.Transcripts
 import graft.extract.Extract
@@ -164,10 +164,10 @@ object Pipeline {
       Canonical.denseIdsBucketedBy(nodes(spark, sfDir), "node_type")
     }
 
-  private def documents(spark: SparkSession, sfDir: String): DataFrame =
+  def documents(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")
 
-  private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
+  def embeddings(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   /** 8-gram decontamination hits (doc_id, n_hits) for the standard
@@ -238,7 +238,8 @@ object Pipeline {
   def dupIndex(spark: SparkSession, sfDir: String): DataFrame =
     StageStore.getOrCreate(spark, sfDir, "dup_index") {
       val docs = documents(spark, sfDir)
-      val reps = docs.select(col("doc_id"), md5(col("text")).as("_h"))
+      val reps = docs
+        .select(col("doc_id"), Dedup.exactDupKey(col("doc_id"), col("text")).as("_h"))
         .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))
       Dedup.minhashBuckets(docs.join(reps, Seq("doc_id")))

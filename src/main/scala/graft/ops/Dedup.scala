@@ -76,6 +76,18 @@ object Dedup {
       .groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
+  /** Grouping key of the exact-dup representatives that every near-dup
+    * chain collapses to (min id per key). A doc with fewer than 3 words
+    * (the chain's ngram) has NO minhash signature, so the all-docs chain
+    * can never pair it: the md5 digest only groups docs that CAN carry a
+    * signature, and shorter docs get a per-doc unique key (ADVICE r05:
+    * the unconditional md5 grouped identical short docs under a min-id
+    * rep with keep = 0 — a latent cross-engine desync only the corpus's
+    * >= 10-word convention hid). */
+  def exactDupKey(id: Column, text: Column): Column =
+    when(size(split(text, " ")) >= 3, md5(text))
+      .otherwise(concat(lit("short|"), id.cast("string")))
+
   /** Streaming exact dedup: first-seen text wins within the watermark
     * horizon (`dropDuplicatesWithinWatermark` keyed by the content
     * digest). Dedup state is bounded by the watermark delay — the
@@ -202,21 +214,14 @@ object Dedup {
     * minimum is always a representative (each rep is the min of its
     * exact group).
     *
-    * STRICT sub-ngram docs stay singletons: a doc with fewer than 3
-    * words (the chain's ngram) has NO minhash signature, so the all-docs
-    * chain can never pair it — identical sub-ngram docs must each keep
-    * their own id (keep = 1, dup_group = own id), exactly as the
-    * full-graph oracle leaves them. The digest therefore only groups
-    * docs that CAN carry a signature; shorter docs get a per-doc unique
-    * key (ADVICE r05: the unconditional md5 grouped identical short
-    * docs under a min-id rep with keep = 0 — a latent cross-engine
-    * desync only the corpus's >= 10-word convention hid). */
+    * Exact-dup groups are keyed by [[exactDupKey]], so identical
+    * sub-ngram docs stay singletons (keep = 1, dup_group = own id),
+    * exactly as the full-graph oracle leaves them. */
   private[graft] def dupClustersWithPairs(docs: DataFrame, stagedPairs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.5): (DataFrame, DataFrame) = {
     val withHash = docs.select(col(idCol), col(textCol),
-      when(size(split(col(textCol), " ")) >= 3, md5(col(textCol)))
-        .otherwise(concat(lit("short|"), col(idCol).cast("string"))).as("_h"))
+      exactDupKey(col(idCol), col(textCol)).as("_h"))
     val reps = withHash.groupBy(col("_h")).agg(min(col(idCol)).as("_rep"))
     val repDocs = docs.join(
       reps.select(col("_rep").as(idCol)), Seq(idCol))

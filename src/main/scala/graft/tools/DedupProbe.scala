@@ -28,8 +28,7 @@ object DedupProbe {
     noop(docs.select(md5(col("text"))))
 
     val withHash = docs.select(col("doc_id"), col("text"),
-      when(size(split(col("text"), " ")) >= 3, md5(col("text")))
-        .otherwise(concat(lit("short|"), col("doc_id").cast("string"))).as("_h"))
+      Dedup.exactDupKey(col("doc_id"), col("text")).as("_h"))
     val reps = withHash.groupBy(col("_h")).agg(min(col("doc_id")).as("_rep"))
     time("reps groupBy")(noop(reps))
     val repDocs = docs.join(reps.select(col("_rep").as("doc_id")), Seq("doc_id"))

@@ -23,7 +23,8 @@ object ProbeIncremental {
     val d = spark.read.parquet(s"$dir/documents.parquet")
     val corpus = d.filter(col("doc_id") % batchMod =!= 7)
     val incoming = d.filter(col("doc_id") % batchMod === 7).localCheckpoint()
-    val reps0 = corpus.select(col("doc_id"), md5(col("text")).as("_h"))
+    val reps0 = corpus
+      .select(col("doc_id"), Dedup.exactDupKey(col("doc_id"), col("text")).as("_h"))
       .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val index = Dedup.minhashBuckets(corpus.join(reps0, Seq("doc_id")))

@@ -1,12 +1,12 @@
 package graft.tools
 
 
-/** Per-query timing/plan probe against committed stage tables (the
+/** Per-query timing probe against committed stage tables (the
   * intended consumption pattern — Bench measures the cold end-to-end
   * story instead).
   *
   * Usage: runMain graft.tools.QueryProbe <sfDir> <reps> <query...>
-  *   GRAFT_PROBE_EXPLAIN=1 additionally prints the formatted plan once.
+  * (formatted plans: graft.tools.PlanDump).
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -16,8 +16,6 @@ object QueryProbe {
     val spark = graft.Session.local(graft.Session.cpus())
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      if (sys.env.contains("GRAFT_PROBE_EXPLAIN"))
-        fn(spark, sfDir).explain("formatted")
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()

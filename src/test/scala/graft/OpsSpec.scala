@@ -223,7 +223,7 @@ class OpsSpec extends SparkSpec {
       (1L, shared), (2L, shared),
       (3L, "one two three four five six"),
       (4L, "ab")).toDF("doc_id", "text")
-    val r = graft.OpsEntry.queries("doc_ngram_novelty")(spark,
+    val r = SparkEntry.queries("doc_ngram_novelty")(spark,
       writeDocs(docs)).collect()
       .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2), x.getLong(3))).toMap
     // docs 1/2: all 3 shingles shared -> novelty 0
@@ -236,7 +236,7 @@ class OpsSpec extends SparkSpec {
 
   test("length histogram: power-of-2 buckets, counts and token sums exact") {
     val docs = Seq((1L, "a b c"), (2L, "a b c d"), (3L, "a")).toDF("doc_id", "text")
-    val r = graft.OpsEntry.queries("doc_length_hist")(spark, writeDocs(docs))
+    val r = SparkEntry.queries("doc_length_hist")(spark, writeDocs(docs))
       .collect().map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2))).toMap
     // 3 tokens -> bin("11") bucket 2; 4 -> bucket 3; 1 -> bucket 1
     assert(r === Map(2L -> ((1L, 3L)), 3L -> ((1L, 4L)), 1L -> ((1L, 1L))))
@@ -257,7 +257,7 @@ class OpsSpec extends SparkSpec {
     val d = (0L to 9L).map(i => (i, s"the a of and is in word$i tail$i"))
       .toDF("doc_id", "text")
     val dir = writeDocs(d)
-    val r = graft.OpsEntry.queries("doc_source_stats")(spark, dir).collect()
+    val r = SparkEntry.queries("doc_source_stats")(spark, dir).collect()
       .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3), x.getLong(4)))
     assert(r.map(_._1).toSet === Set("src0", "src1"))
     r.foreach { case (_, nDocs, tokens, _, _) =>

@@ -911,11 +911,8 @@ object OpsEntry {
       val d = Pipeline.documents(s, dir)
       val corpus = d.filter(col("doc_id") % 10 =!= 7)
       val incoming = d.filter(col("doc_id") % 10 === 7)
-      val reps = corpus
-        .select(col("doc_id"), Dedup.exactDupKey(col("doc_id"), col("text")).as("_h"))
-        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      val index = Dedup.minhashBuckets(corpus.join(reps, Seq("doc_id")))
+      val index = Dedup.minhashBuckets(
+        corpus.join(Dedup.exactDupReps(corpus).select("doc_id"), Seq("doc_id")))
       Dedup.checkAgainstIndex(incoming, index, corpus)
         .select(col("new_id").cast("long").as("new_id"),
           col("corpus_id").cast("long").as("corpus_id"), col("jaccard_ppm"))

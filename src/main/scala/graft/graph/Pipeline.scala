@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, min}
+import org.apache.spark.sql.functions.col
 
 import graft.sources.Transcripts
 import graft.extract.Extract
@@ -238,11 +238,7 @@ object Pipeline {
   def dupIndex(spark: SparkSession, sfDir: String): DataFrame =
     StageStore.getOrCreate(spark, sfDir, "dup_index") {
       val docs = documents(spark, sfDir)
-      val reps = docs
-        .select(col("doc_id"), Dedup.exactDupKey(col("doc_id"), col("text")).as("_h"))
-        .groupBy(col("_h")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      Dedup.minhashBuckets(docs.join(reps, Seq("doc_id")))
+      Dedup.minhashBuckets(docs.join(Dedup.exactDupReps(docs).select("doc_id"), Seq("doc_id")))
     }
 
   /** Run every stage to completion (idempotent / resumable). The two

@@ -88,6 +88,13 @@ object Dedup {
     when(size(split(text, " ")) >= 3, md5(text))
       .otherwise(concat(lit("short|"), id.cast("string")))
 
+  /** Exact-dup representatives: one row per [[exactDupKey]] group, the key
+    * `_h` and the group's minimum id as `idCol`. */
+  def exactDupReps(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    docs.groupBy(exactDupKey(col(idCol), col(textCol)).as("_h"))
+      .agg(min(col(idCol)).as(idCol))
+
   /** Streaming exact dedup: first-seen text wins within the watermark
     * horizon (`dropDuplicatesWithinWatermark` keyed by the content
     * digest). Dedup state is bounded by the watermark delay — the
@@ -220,9 +227,7 @@ object Dedup {
   private[graft] def dupClustersWithPairs(docs: DataFrame, stagedPairs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.5): (DataFrame, DataFrame) = {
-    val withHash = docs.select(col(idCol), col(textCol),
-      exactDupKey(col(idCol), col(textCol)).as("_h"))
-    val reps = withHash.groupBy(col("_h")).agg(min(col(idCol)).as("_rep"))
+    val reps = exactDupReps(docs, idCol, textCol).withColumnRenamed(idCol, "_rep")
     val repDocs = docs.join(
       reps.select(col("_rep").as(idCol)), Seq(idCol))
     val pairs = Option(stagedPairs)
@@ -231,7 +236,8 @@ object Dedup {
       reps.select(col("_rep").cast("long").as("id")),
       pairs.select(col("a").cast("long").as("src"),
         col("b").cast("long").as("dst")))
-    val out = withHash.join(reps, Seq("_h"))
+    val out = docs.select(col(idCol), exactDupKey(col(idCol), col(textCol)).as("_h"))
+      .join(reps, Seq("_h"))
       .join(comp, col("_rep").cast("long") === col("id"))
       .select(col(idCol), col("component").as("dup_group"),
         (col(idCol).cast("long") === col("component")).cast("long").as("keep"))

@@ -22,8 +22,10 @@ import graft.triples.Triples
   */
 object Scaling {
 
+  /** One run at one parallelism level; `mentionsSec`/`resolvedSec` are
+    * the walls of the two materialized phases inside `seconds`. */
   case class Run(parallelism: Int, seconds: Double, triples: Long,
-      checksum: Long) {
+      checksum: Long, mentionsSec: Double, resolvedSec: Double) {
     def perSec: Double = triples / seconds
   }
 
@@ -31,12 +33,10 @@ object Scaling {
     val spark = graft.Session.local(parallelism)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      def phase[A](label: String)(f: => A): A = {
-        val p0 = System.nanoTime()
+      def timed[A](f: => A): (A, Double) = {
+        val t0 = System.nanoTime()
         val res = f
-        if (sys.env.contains("GRAFT_SCALE_DEBUG"))
-          println(f"[scale] p=$parallelism $label ${(System.nanoTime() - p0) / 1e9}%.2f s")
-        res
+        (res, (System.nanoTime() - t0) / 1e9)
       }
       val tmp = java.nio.file.Files
         .createTempDirectory(s"graft_scale_p$parallelism").toString
@@ -45,30 +45,24 @@ object Scaling {
       // the mentions subtree ~5x (bindings, self map, both use sides,
       // join-back) and the job stops scaling with cores. localCheckpoint is
       // NOT used — it serializes rows one by one (measured 9x slower than
-      // a columnar parquet round-trip).
+      // a columnar parquet round-trip), and a MEMORY_AND_DISK persist
+      // measured slower and noisier too (BENCH.md §2).
       def mat(df: org.apache.spark.sql.DataFrame, name: String) = {
-        if (sys.env.contains("GRAFT_SCALE_MEM")) {
-          val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          c.count()
-          c
-        } else {
-          df.write.mode("overwrite").parquet(s"$tmp/$name")
-          spark.read.parquet(s"$tmp/$name")
-        }
+        df.write.mode("overwrite").parquet(s"$tmp/$name")
+        spark.read.parquet(s"$tmp/$name")
       }
       // Untimed warmup on a miniature corpus: JIT + whole-stage-codegen
       // compilation is a per-JVM constant (~10s) that would otherwise
       // read as a serial fraction and corrupt the scaling measurement.
-      phase("warmup") {
-        val wc = Transcripts.synthetic(spark, 2000, turnsPerConv)
-        val wm = mat(Extract.mentions(wc), "warm_m")
-        val wr = mat(Resolve.resolved(wm), "warm_r")
-        Triples.knownOnly(wr, Triples.entityNames(wm)).count()
-      }
+      val wc = Transcripts.synthetic(spark, 2000, turnsPerConv)
+      val wm = mat(Extract.mentions(wc), "warm_m")
+      val wr = mat(Resolve.resolved(wm), "warm_r")
+      Triples.knownOnly(wr, Triples.entityNames(wm)).count()
+
       val t0 = System.nanoTime()
       val corpus = Transcripts.synthetic(spark, nConvs, turnsPerConv)
-      val m = phase("mentions")(mat(Extract.mentions(corpus), "mentions"))
-      val r = phase("resolved")(mat(Resolve.resolved(m), "resolved"))
+      val (m, mSec) = timed(mat(Extract.mentions(corpus), "mentions"))
+      val (r, rSec) = timed(mat(Resolve.resolved(m), "resolved"))
       val triples = Triples.knownOnly(r, Triples.entityNames(m))
       // order-insensitive XOR checksum (sum would overflow ANSI longs)
       val agg = triples
@@ -76,7 +70,7 @@ object Scaling {
           col("subj"), col("pred"), col("obj")).as("h"))
         .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("chk")).collect()(0)
       val sec = (System.nanoTime() - t0) / 1e9
-      Run(parallelism, sec, agg.getLong(0), agg.getLong(1))
+      Run(parallelism, sec, agg.getLong(0), agg.getLong(1), mSec, rSec)
     } finally spark.stop()
   }
 
@@ -86,7 +80,7 @@ object Scaling {
     // JIT/GC/block-manager pollution; a wrapper combines the two lines.
     if (args.headOption.contains("single")) {
       val r = runAt(args(1).toInt, args(2).toLong, args(3).toInt)
-      println(f"""{"parallelism":${r.parallelism},"sec":${r.seconds}%.2f,"triples":${r.triples},"triples_per_sec":${r.perSec}%.0f,"checksum":${r.checksum}}""")
+      println(f"""{"parallelism":${r.parallelism},"sec":${r.seconds}%.2f,"mentions_s":${r.mentionsSec}%.2f,"resolved_s":${r.resolvedSec}%.2f,"triples":${r.triples},"triples_per_sec":${r.perSec}%.0f,"checksum":${r.checksum}}""")
       return
     }
     // "control <p>": the host-ceiling reference — a zero-shuffle, zero-IO,

@@ -2,15 +2,22 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
+
 import graft.extract.Extract
+import graft.graph.Pipeline
 import graft.link.Resolve
+import graft.schema.Mention
+import graft.streaming.StatefulResolve
 import graft.triples.Triples
 import graft.oracle.RefOracle
 
 /** Property-style fuzz: random corpora drawn from the grammar space (plus
   * narration noise and malformed segments) must produce exactly the
   * oracle's triple set — generalizes ParitySpec beyond the synthetic
-  * generator's shapes. Seeded, so failures reproduce. */
+  * generator's shapes. Seeded, so failures reproduce. Every resolution
+  * path runs on the same corpora: the batch resolver, the stateful
+  * resolver and the append-incremental build. */
 class FuzzSpec extends SparkSpec {
 
   private val ents = (0 until 8).map(i => s"t:e$i")
@@ -48,22 +55,52 @@ class FuzzSpec extends SparkSpec {
     }
   }
 
-  private def engineTriples(corpus: Seq[RefOracle.T]): Set[(String, String, String)] = {
-    val df = turns(corpus.map(t => (t.convId, t.turnIdx, t.text)): _*)
-    val m = Extract.mentions(df)
-    Triples.knownOnly(Resolve.resolved(m), Triples.entityNames(m))
-      .select("subj", "pred", "obj").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+  private type Triple = (String, String, String)
+
+  /** The 12 seeded corpora every path below runs on. */
+  private lazy val corpora: Seq[Seq[RefOracle.T]] = {
+    val rnd = new Random(42)
+    Seq.fill(12)(genCorpus(rnd))
   }
 
-  test("engine matches the reference-semantics oracle on 12 random corpora") {
-    val rnd = new Random(42)
-    (0 until 12).foreach { i =>
-      val corpus = genCorpus(rnd)
-      val expected = RefOracle.triples(corpus)
-      val got = engineTriples(corpus)
-      assert(got === expected,
+  private def df(corpus: Seq[RefOracle.T]): DataFrame =
+    turns(corpus.map(t => (t.convId, t.turnIdx, t.text)): _*)
+
+  private def tripleSet(triples: DataFrame): Set[Triple] =
+    triples.select("subj", "pred", "obj").distinct()
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+
+  /** Runs `path` on every corpus and compares it with the oracle. */
+  private def matchesOracle(path: (Seq[RefOracle.T], Int) => Set[Triple]): Unit =
+    corpora.zipWithIndex.foreach { case (corpus, i) =>
+      assert(path(corpus, i) === RefOracle.triples(corpus),
         s"iteration $i diverged; corpus:\n${corpus.map(t => s"${t.convId}/${t.turnIdx}: ${t.text}").mkString("\n")}")
+    }
+
+  test("engine matches the reference-semantics oracle on 12 random corpora") {
+    matchesOracle { (corpus, _) =>
+      val m = Extract.mentions(df(corpus))
+      tripleSet(Triples.knownOnly(Resolve.resolved(m), Triples.entityNames(m)))
+    }
+  }
+
+  test("stateful resolver, run as a batch, matches the oracle on the same 12 corpora") {
+    import spark.implicits._
+    matchesOracle { (corpus, _) =>
+      val m = Extract.mentions(df(corpus))
+      tripleSet(Triples.knownOnly(
+        StatefulResolve.resolve(spark, m.as[Mention]).toDF(), Triples.entityNames(m)))
+    }
+  }
+
+  test("append of a random conversation split matches the oracle on the same 12 corpora") {
+    matchesOracle { (corpus, i) =>
+      val rnd = new Random(i)
+      val convs = rnd.shuffle(corpus.map(_.convId).distinct)
+      val committed = convs.take(1 + rnd.nextInt(convs.size - 1)).toSet
+      val (old, neu) = corpus.partition(t => committed(t.convId))
+      val m = Extract.mentions(df(old))
+      tripleSet(Pipeline.appendBatch(m, Resolve.resolved(m), df(neu))._3)
     }
   }
 }
